@@ -203,16 +203,20 @@ def cli(argv: list[str] | None = None, spark=None) -> int:
         # predict
         model = Tr.DecisionListModel.load(args.model, schema.label)
         df = read_training_tsv(spark, args.input, schema)
-        pred = model.transform(df)
         os.makedirs(args.output, exist_ok=True)
-        pred.write.mode("overwrite").parquet(
-            os.path.join(args.output, "predictions")
-        )
-        if schema.label in pred.columns:
-            acc = Tr.accuracy(model, df, schema.label)
-            print(json.dumps({"rows": pred.count(), "accuracy": acc}))
-        else:
-            print(json.dumps({"rows": pred.count()}))
+        pred_path = os.path.join(args.output, "predictions")
+        model.transform(df).write.mode("overwrite").parquet(pred_path)
+        # rows and accuracy in ONE aggregate over the just-written
+        # parquet — counting and scoring the lazy frame would scan and
+        # parse the TSV twice more
+        from pyspark.sql import functions as F
+
+        written = spark.read.parquet(pred_path)
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if schema.label in written.columns:
+            hit = F.col("prediction") == F.col(schema.label)
+            aggs.append(F.avg(hit.cast("double")).alias("accuracy"))
+        print(json.dumps(written.agg(*aggs).first().asDict()))
         return 0
     finally:
         if own_session:

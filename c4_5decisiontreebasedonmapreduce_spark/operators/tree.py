@@ -6,9 +6,10 @@ model accumulated as a queue of conjunctive rules
 (`/root/reference/src/program/Main.java:59-131`, `Rule.java:7-56`). Here the
 loop is driver-side Python around DataFrame jobs:
 
-- the frontier is tiny (≤ nodes at one depth), so rule matching is a
-  CASE WHEN chain compiled into the scan — no join, no shuffle; frontier
-  rules partition the data, so each row gets exactly one ``rid``;
+- each row carries its node id ``rid``; a level's splits update it
+  through per-parent lookup arrays compiled into the scan — no join, no
+  shuffle; frontier rules partition the data, so each row gets exactly
+  one ``rid``;
 - the training DataFrame is cached once (the reference re-reads HDFS every
   level, `Main.java:200`);
 - per level: contingency aggregation + gain-ratio stats (c45_stats) and a
@@ -25,6 +26,7 @@ majority-label leaves instead of silently dropping their rows (Q5).
 from __future__ import annotations
 
 import json
+import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -129,14 +131,20 @@ class DecisionListModel:
         return min(totals.items(), key=lambda kv: (-kv[1], kv[0]))[0]
 
     def prediction_column(self, default: str | None = None) -> Column:
-        """Compile the decision list into a TRIE of nested CASE WHENs —
-        the prediction path the reference lacks entirely.
+        """The decision list as ONE nested CASE expression — the
+        prediction path the reference lacks entirely.
 
         Rules are root-to-leaf paths, so they share condition prefixes;
-        compiling the shared trie keeps the expression O(tree nodes) and
+        nesting the shared trie keeps the expression O(tree nodes) and
         evaluates each condition once per row. A flat rule-by-rule WHEN
         chain is O(rules × depth) and overflows JVM method-size limits
         around depth 8 (codegen falls back to interpreted row scans).
+
+        The expression is rendered as Spark SQL text (:func:`_trie_sql`)
+        and parsed by one ``F.expr`` call, so building it costs a fixed
+        number of py4j round trips whatever the rule count; assembling it
+        from ``F.when`` Column objects paid several round trips per
+        condition (~5.5k calls, ~0.7 s for a 64-rule model).
 
         Rows no trie path matches — i.e. a categorical value outside the
         training domain — predict ``default``, which falls back to the
@@ -145,29 +153,9 @@ class DecisionListModel:
         predictions are unaffected)."""
         if default is None:
             default = self.majority_label
-        remaining = [(r.conditions, r.label) for r in self.rules]
-        return self._compile_trie(remaining, default)
-
-    @staticmethod
-    def _compile_trie(
-        rules: list[tuple[tuple[Condition, ...], str | None]],
-        default: str | None,
-    ) -> Column:
-        exact = [label for conds, label in rules if not conds]
-        if exact:
-            # a fully-matched rule: leaves partition the space, so there
-            # is at most one
-            return F.lit(exact[0])
-        groups: dict[Condition, list] = {}
-        for conds, label in rules:
-            groups.setdefault(conds[0], []).append((conds[1:], label))
-        chain = None
-        for cond, sub in groups.items():
-            inner = DecisionListModel._compile_trie(sub, default)
-            chain = (F.when if chain is None else chain.when)(
-                cond.column(), inner
-            )
-        return chain.otherwise(F.lit(default))
+        return F.expr(
+            _trie_sql([(r.conditions, r.label) for r in self.rules], default)
+        )
 
     def transform(self, df: DataFrame, out_col: str = "prediction") -> DataFrame:
         return df.withColumn(out_col, self.prediction_column())
@@ -227,8 +215,8 @@ class DecisionListModel:
 
         def lit(s: str | None) -> str:
             # an interior (label-None) rule predicts NULL in transform
-            # (_compile_trie emits F.lit(None)) — the SQL must agree,
-            # not substitute the default
+            # (_trie_sql renders it as NULL) — the SQL must agree, not
+            # substitute the default
             if s is None:
                 return "NULL"
             return "'" + s.replace("'", "''") + "'"
@@ -423,6 +411,80 @@ class DecisionListModel:
 MISSING_CATEGORY = "__missing__"
 
 
+# Spark SQL rendering. Every expression whose size grows with max_bins,
+# the rule count or the frontier is written as SQL text and parsed by
+# ONE ``F.expr`` call: a Column built from ``F.lit``/``F.when`` objects
+# costs py4j round trips per literal or per condition (``F.lit(list)``
+# is one ``lit`` call per element), and at a 600-node level those round
+# trips, not Spark, were the training run's driver time.
+
+
+def _sql_lit(v) -> str:
+    """Spark SQL text that parses back to exactly ``v``.
+
+    Doubles print as ``repr`` + ``D`` (shortest round-trip digits; a bare
+    ``3.5`` parses as DECIMAL and would change the comparison's
+    coercion); NaN and ±Infinity, which have no literal syntax, as
+    ``CAST('NaN' AS DOUBLE)`` etc. Strings are single-quoted with ``\\``
+    and ``'`` backslash-escaped — Spark SQL reads backslash escapes, so
+    an unescaped ``a\\tb`` would parse as a TAB. ``None`` is NULL; ints
+    print as integers."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, (int, np.integer)) and not isinstance(v, bool):
+        return str(int(v))
+    f = float(v)
+    if math.isnan(f):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(f):
+        return f"CAST('{'' if f > 0 else '-'}Infinity' AS DOUBLE)"
+    return f"{f!r}D"
+
+
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_array(values) -> str:
+    return "array(" + ", ".join(_sql_lit(v) for v in values) + ")"
+
+
+def _spark_cond_sql(cond: Condition) -> str:
+    """Spark-SQL text of one Condition, semantically identical to
+    ``cond.column()``. (``Condition.sql()`` is the DuckDB dialect —
+    double-quoted identifiers Spark only accepts under
+    ansi.doubleQuotedIdentifiers, and no backslash escapes.)"""
+    if cond.op == OP_EQ:
+        return f"{_sql_ident(cond.attr)} = {_sql_lit(str(cond.value))}"
+    return f"{_sql_ident(cond.attr)} {cond.op} {_sql_lit(float(cond.value))}"
+
+
+def _trie_sql(
+    rules: list[tuple[tuple[Condition, ...], str | None]],
+    default: str | None,
+) -> str:
+    """Nested CASE text of the decision-list trie: rules sharing a first
+    condition share one WHEN, whose THEN is the trie of their remaining
+    conditions; a node no WHEN matches yields ``default``."""
+    exact = [label for conds, label in rules if not conds]
+    if exact:
+        # a fully-matched rule: leaves partition the space, so there is
+        # at most one
+        return _sql_lit(exact[0])
+    groups: dict[Condition, list] = {}
+    for conds, label in rules:
+        groups.setdefault(conds[0], []).append((conds[1:], label))
+    if not groups:
+        return _sql_lit(default)
+    whens = " ".join(
+        f"WHEN {_spark_cond_sql(cond)} THEN {_trie_sql(sub, default)}"
+        for cond, sub in groups.items()
+    )
+    return f"CASE {whens} ELSE {_sql_lit(default)} END"
+
+
 def _prologue_scan(
     base: DataFrame,
     *,
@@ -472,12 +534,17 @@ def _prologue_scan(
     cols = cat_names + num_names + [label]
     probs = sorted({i / max_bins for i in range(max_bins + 1)} | {0.5})
     med_idx = probs.index(0.5)
+    # the probabilities array is rendered once and shared by every
+    # numeric attribute: one F.expr per column instead of max_bins+1
+    # F.lit round trips per column
+    probs_sql = _sql_array(probs)
     aggs = [
         F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{i}")
         for i, c in enumerate(cols)
     ] + [
-        F.percentile_approx(c, F.lit(probs), F.lit(10_000)).alias(
-            f"__edges_{i}"
+        F.expr(
+            f"percentile_approx({_sql_ident(c)}, {probs_sql}, 10000)"
+            f" AS __edges_{i}"
         )
         for i, c in enumerate(num_names)
     ]
@@ -550,16 +617,35 @@ def _snap_numeric(
     boundary stay *exact* — binning only restricts the candidate set, it
     never distorts a candidate's entropy. At 100 TB this is what bounds
     the shuffle: ≤ max_bins rows per (node, attribute) regardless of data
-    volume."""
-    for a, uniq in edges_by_attr.items():
-        arr = F.lit(uniq)  # one array literal, not max_bins scalar literals
-        snapped = F.array_min(F.filter(arr, lambda e: e >= F.col(a)))
+    volume.
+
+    The whole projection is ONE ``selectExpr`` whose edge arrays are SQL
+    text (:func:`_sql_array`), so its py4j cost is per column, not per
+    edge: ``F.lit(edges)`` builds the array from one ``lit`` round trip
+    per element, max_bins+1 of them per numeric attribute."""
+    if not edges_by_attr:
+        return df
+    dtypes = dict(df.dtypes)
+    # the filter lambda's variable shadows a column of the same name
+    # inside the lambda body, so it must not be one of them
+    lv = "e"
+    while lv.lower() in {c.lower() for c in df.columns}:
+        lv = "_" + lv
+    exprs = []
+    for c in df.columns:
+        col = _sql_ident(c)
+        edges = edges_by_attr.get(c)
+        if not edges:
+            exprs.append(col)
+            continue
+        above = f"filter({_sql_array(edges)}, {lv} -> {lv} >= {col})"
         # values above the top edge (possible only through quantile error)
         # keep their own value so ordering semantics never break
-        df = df.withColumn(
-            a, F.coalesce(snapped, F.col(a)).cast(dict(df.dtypes)[a])
+        exprs.append(
+            f"CAST(coalesce(array_min({above}), {col}) AS {dtypes[c]})"
+            f" AS {col}"
         )
-    return df
+    return df.selectExpr(*exprs)
 
 
 def train(
@@ -940,45 +1026,73 @@ def _decide_level(
     return next_frontier, splits
 
 
-def _spark_cond_sql(cond) -> str:
-    """Spark-SQL text of one Condition, semantically identical to
-    ``cond.column()``: backtick identifiers, ``D``-suffixed double
-    literals (a bare ``3.5`` parses as DECIMAL in Spark SQL and would
-    change the comparison's coercion), single-quote escaping for
-    categorical values. (``Condition.sql()`` is the DuckDB dialect —
-    double-quoted identifiers Spark only accepts under
-    ansi.doubleQuotedIdentifiers.)"""
-    attr = "`" + cond.attr.replace("`", "``") + "`"
-    if cond.op == OP_EQ:
-        v = str(cond.value).replace("'", "''")
-        return f"{attr} = '{v}'"
-    return f"{attr} {cond.op} {float(cond.value)!r}D"
-
-
 def _apply_splits(
     level: DataFrame, splits: list[tuple[int, list]]
 ) -> DataFrame:
     """rid update: only this level's split conditions enter the plan.
 
-    The expression is built as ONE SQL string parsed by one ``F.expr``
-    call. The r12 shape built it from nested ``F.when`` Column objects —
-    at 3-6 py4j round-trips per condition, a wide level's hundreds of
-    conditions cost 0.7-1.1 s of pure driver latency per c45_train run
-    (measured by phase-instrumentation; the numpy stats and the decide
-    step are <0.06 s combined), serialized between the level actions
-    exactly where VERDICT r12 item 4 saw the dispatch gaps. Parents are
-    distinct, so the flat CASE is equivalent to the old
-    COALESCE-of-WHENs: first matching parent wins, a parent whose child
-    conditions all miss yields NULL either way, and non-parent rids
-    yield NULL — dropped by the isNotNull filter as before."""
-    arms = []
+    Splits are data, not code: three lookup arrays indexed by the
+    parent's ``rid`` hold its first child id, the code of its split
+    attribute, and (numeric splits) its boundary. A row's new rid is the
+    first child id plus its branch offset — the attribute's 0-based
+    position in its declared domain (``array_position``) or
+    ``value > boundary`` (0 for the ``<=`` child, 1 for ``>``). This
+    relies on the shape :func:`_decide_level` gives every split: child
+    ids are consecutive, a numeric split's ``<=`` child comes first, and
+    a categorical split's children are the attribute's declared domain in
+    order, the same list for every parent. The generated code is one
+    branch per split ATTRIBUTE, O(|attributes|) whatever the frontier: a
+    CASE with one WHEN per condition overflowed Janino's 64 KB method
+    limit on a 600-node level, paying a failed compile and then an
+    interpreted scan. The whole expression is one SQL string parsed by
+    one ``F.expr`` call, so its py4j cost is fixed too.
+
+    ``try_element_at`` yields NULL for a rid past the last parent (leaf
+    rids, under ANSI ``element_at`` would raise) and the arrays hold NULL
+    for a leaf rid below it; a categorical value outside the domain
+    yields NULL as well — such rows drop out by the isNotNull filter, as
+    rows no child condition matched always have."""
+    n_rid = max(parent for parent, _ in splits) + 1
+    first: list[int | None] = [None] * n_rid
+    code: list[int | None] = [None] * n_rid
+    bound: list[float | None] = [None] * n_rid
+    codes: dict[str, int] = {}  # split attribute → its code
+    domains: dict[str, list[str]] = {}  # categorical split → child values
     for parent, children in splits:
-        inner = " ".join(
-            f"WHEN {_spark_cond_sql(cond)} THEN {int(cid)}"
-            for cond, cid in children
-        )
-        arms.append(f"WHEN `{S.RID}` = {int(parent)} THEN (CASE {inner} END)")
-    rid_expr = f"CAST((CASE {' '.join(arms)} END) AS INT)"
+        cond, first[parent] = children[0]
+        code[parent] = codes.setdefault(cond.attr, len(codes))
+        if cond.op == OP_EQ:
+            domains[cond.attr] = [str(c.value) for c, _ in children]
+        else:
+            bound[parent] = float(cond.value)
+
+    idx = f"{_sql_ident(S.RID)} + 1"
+    code_at = f"try_element_at({_sql_array(code)}, {idx})"
+    arms = [
+        f"WHEN {k} THEN nullif(array_position("
+        f"{_sql_array(domains[a])}, {_sql_ident(a)}), 0) - 1"
+        for a, k in codes.items()
+        if a in domains
+    ]
+    numeric = [
+        # a comparison with a DOUBLE boundary casts the column to DOUBLE
+        # whatever its numeric type; casting first lets every numeric
+        # attribute share the one boundary lookup
+        f"WHEN {k} THEN CAST({_sql_ident(a)} AS DOUBLE)"
+        for a, k in codes.items()
+        if a not in domains
+    ]
+    offset = ""
+    if numeric:
+        value = f"CASE {code_at} {' '.join(numeric)} END"
+        above = f"try_element_at({_sql_array(bound)}, {idx})"
+        offset = f"CAST(({value}) > {above} AS INT)"
+    if arms:
+        tail = f" ELSE {offset}" if offset else ""
+        offset = f"CASE {code_at} {' '.join(arms)}{tail} END"
+    rid_expr = (
+        f"CAST(try_element_at({_sql_array(first)}, {idx}) + {offset} AS INT)"
+    )
     return level.withColumn(S.RID, F.expr(rid_expr)).where(
         F.col(S.RID).isNotNull()
     )

@@ -26,3 +26,36 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture
+def py4j_calls(spark):
+    """``count(fn)``: the number of py4j round trips ``fn()`` makes.
+
+    Wraps the gateway client's ``send_command``, through which every
+    Python→JVM call goes, and counts the calling thread's commands only:
+    py4j's finalizer thread releases dead Java handles through the same
+    method at times set by Python's garbage collector, not by ``fn``."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn) -> int:
+        calls = 0
+        caller = threading.get_ident()
+        send = client.send_command
+
+        def counted(*args, **kwargs):
+            nonlocal calls
+            if threading.get_ident() == caller:
+                calls += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            fn()
+        finally:
+            client.send_command = send
+        return calls
+
+    return count

@@ -137,7 +137,7 @@ def test_wire_format_rejects_delimiter_values():
 
 def test_sql_case_interior_rule_predicts_null():
     """to_sql_case parity detail (review r7): an interior (label-None)
-    rule predicts NULL in transform (_compile_trie emits F.lit(None)),
+    rule predicts NULL in transform (_trie_sql renders it as NULL),
     so the SQL export must render THEN NULL — not substitute the
     default — while non-matching rows still fall to the ELSE default."""
     import duckdb

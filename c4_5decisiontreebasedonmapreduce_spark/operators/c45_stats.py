@@ -86,6 +86,7 @@ def melt_mixed(
     num_names: list[str],
     label: str,
     rid_col: str = RID,
+    weight: str | None = None,
 ) -> DataFrame:
     """Single-pass unpivot of categorical AND numeric features to
     ``(rid, aid, value_s, value_d, class)``, plus one synthetic
@@ -97,7 +98,11 @@ def melt_mixed(
     pass per tree level becomes ONE map-side-combined exchange whose
     grouped output feeds class histograms, categorical gain ratios and
     numeric best-splits (via ReuseExchange — the three consumers share
-    the identical child plan)."""
+    the identical child plan).
+
+    ``weight`` names a row-weight column to carry along (Quinlan-
+    fractional training); NULL attribute values are then KEPT, so their
+    group's mass is the (node, attribute) unknown mass."""
     entries = [f"'{CC_AID}', cast(null as string), cast(null as double)"]
     for a in cat_names:
         entries.append(f"'{a}', cast(`{a}` as string), cast(null as double)")
@@ -108,19 +113,29 @@ def melt_mixed(
         f"stack({len(entries)}, {', '.join(entries)})"
         " as (aid, value_s, value_d)",
         f"`{label}` as {CLASS}",
+        *([f"`{weight}` as `{weight}`"] if weight else []),
     )
-    return stacked.where(
+    return stacked if weight else _drop_unknown(stacked)
+
+
+def _drop_unknown(melted: DataFrame) -> DataFrame:
+    """The melt's rows minus those whose attribute value is NULL."""
+    return melted.where(
         (F.col(AID) == CC_AID)
         | F.col("value_s").isNotNull()
         | F.col("value_d").isNotNull()
     )
 
 
-def mixed_contingency(melted: DataFrame) -> DataFrame:
-    """(rid, aid, value_s, value_d, class) → counts; the level's single
+def mixed_contingency(
+    melted: DataFrame, weight: str | None = None
+) -> DataFrame:
+    """(rid, aid, value_s, value_d, class) → counts, or sums of the
+    ``weight`` column (exact DECIMAL masses); the level's single
     data-sized aggregation."""
+    agg = F.sum(weight) if weight else F.count("*")
     return melted.groupBy(RID, AID, "value_s", "value_d", CLASS).agg(
-        F.count("*").alias(CNT)
+        agg.alias(CNT)
     )
 
 
@@ -152,16 +167,71 @@ def node_info(class_counts: DataFrame) -> DataFrame:
     )
 
 
-def _gain_ratio_col(info: Column, entr: Column, split_info: Column) -> Column:
+def attribute_info(
+    cont: DataFrame, cat_names: list[str], label_domain: list[str]
+) -> DataFrame:
+    """:func:`node_info`'s per-(rid, aid) twin for a weighted contingency
+    (Quinlan-fractional training): ``info`` and ``n`` over the rows whose
+    attribute value is KNOWN, and the ``unknown`` mass of the rest.
+    Numeric attributes count in-domain classes only, as
+    :func:`numeric_best_split`'s pivot does."""
+    known = F.col("value_s").isNotNull() | F.col("value_d").isNotNull()
+    per_class = (
+        cont.where(
+            (F.col(AID) != CC_AID)
+            & (F.col(AID).isin(cat_names) | F.col(CLASS).isin(label_domain))
+        )
+        .groupBy(RID, AID, CLASS)
+        .agg(
+            F.sum(F.when(known, F.col(CNT)).otherwise(0.0)).alias("kc"),
+            F.sum(F.when(known, 0.0).otherwise(F.col(CNT))).alias("uc"),
+        )
+    )
+    return per_class.groupBy(RID, AID).agg(
+        F.sum("kc").alias("n"),
+        entropy_from_counts(F.sum("kc"), F.sum(xlog2x(F.col("kc")))).alias(
+            "info"
+        ),
+        F.sum("uc").alias("unknown"),
+    )
+
+
+def _split_info_col(
+    n: Column, sum_xlog2x: Column, unknown: Column | None
+) -> Column:
+    """Split information over the known branches, plus — under
+    Quinlan-fractional training — the unknown mass as one more branch
+    (xlog2x(0) = 0: an empty unknown branch leaves the value exact)."""
+    if unknown is None:
+        return entropy_from_counts(n, sum_xlog2x)
+    return entropy_from_counts(n + unknown, sum_xlog2x + xlog2x(unknown))
+
+
+def _gain_ratio_col(
+    info: Column, entr: Column, split_info: Column, known: Column | None = None
+) -> Column:
     """``GR = (Info - Entr)/SplitI`` with the reference's special case
     (`MyReducer.java:282-298`): SplitI == 0 → 0 if the node is pure
     (Info == 0) else a tiny positive 1e-5 so the attribute remains
-    selectable but near-worst."""
+    selectable but near-worst. ``known`` (Quinlan-fractional) is the
+    known fraction F that scales the ratio."""
     gain = F.greatest(F.lit(0.0), info - entr)  # clamp float noise
-    return F.when(
+    gr = F.when(
         split_info == 0.0,
         F.when(info == 0.0, F.lit(0.0)).otherwise(F.lit(0.00001)),
     ).otherwise(gain / split_info)
+    return gr if known is None else known * gr
+
+
+def _info_keys(info_df: DataFrame):
+    """Join keys of the Info relation: per node (:func:`node_info`), or
+    per (node, attribute) under fractional training
+    (:func:`attribute_info`), whose unknown mass and known fraction the
+    builders then fold in."""
+    if AID not in info_df.columns:
+        return RID, None, None
+    unknown = F.col("unknown")
+    return [RID, AID], unknown, F.col("n") / (F.col("n") + unknown)
 
 
 def categorical_stats(cont: DataFrame, info_df: DataFrame) -> DataFrame:
@@ -169,8 +239,14 @@ def categorical_stats(cont: DataFrame, info_df: DataFrame) -> DataFrame:
     split information, gain ratio (`MyReducer.java:254-298`).
 
     Two cascaded hash aggregates (value level → attribute level) + a
-    broadcast join of the tiny per-node Info relation.
+    broadcast join of the tiny per-node Info relation. With a
+    per-attribute ``info_df`` (:func:`attribute_info`), ``cont`` holds
+    the known rows only.
     """
+    keys, unknown, known = _info_keys(info_df)
+    x_attr = []  # Σ xlog2x(nv) again, for the unknown-branch split info
+    if unknown is not None:
+        x_attr = [F.sum(xlog2x(F.col("nv"))).alias("x_attr")]
     per_value = cont.groupBy(RID, AID, VALUE).agg(
         F.sum(CNT).alias("nv"),
         entropy_from_counts(F.sum(CNT), F.sum(xlog2x(F.col(CNT)))).alias(
@@ -183,8 +259,14 @@ def categorical_stats(cont: DataFrame, info_df: DataFrame) -> DataFrame:
         entropy_from_counts(
             F.sum("nv"), F.sum(xlog2x(F.col("nv")))
         ).alias("split_info"),
+        *x_attr,
     )
-    joined = per_attr.join(F.broadcast(info_df), RID)
+    joined = per_attr.join(F.broadcast(info_df), keys)
+    if known is not None:
+        joined = joined.withColumn(
+            "split_info",
+            _split_info_col(F.col("n_attr"), F.col("x_attr"), unknown),
+        )
     return joined.select(
         RID,
         AID,
@@ -192,7 +274,7 @@ def categorical_stats(cont: DataFrame, info_df: DataFrame) -> DataFrame:
         "entr",
         "split_info",
         _gain_ratio_col(
-            F.col("info"), F.col("entr"), F.col("split_info")
+            F.col("info"), F.col("entr"), F.col("split_info"), known
         ).alias("gain_ratio"),
     )
 
@@ -406,7 +488,13 @@ def _score_candidates(
     min_ratio: float,
 ) -> DataFrame:
     """Candidate-boundary entropies + guard + per-(rid, aid) argmin from
-    the cumulative class counts (`le_*` vs `tot_*` columns)."""
+    the cumulative class counts (`le_*` vs `tot_*` columns). With a
+    per-attribute ``info_df`` (:func:`attribute_info`), the candidates'
+    split information gets the unknown branch and the ratio the known
+    fraction."""
+    keys, unknown, known = _info_keys(info_df)
+    if unknown is not None:
+        cum = cum.join(F.broadcast(info_df.select(*keys, "unknown")), keys)
     n = sum((F.col(f"tot_{c}") for c in classes), F.lit(0))
     n_le = sum((F.col(f"le_{c}") for c in classes), F.lit(0))
     n_gt = n - n_le
@@ -428,7 +516,7 @@ def _score_candidates(
         n_le.alias("n_le"),
         n_gt.alias("n_gt"),
         ((n_le * ent_le + n_gt * ent_gt) / n).alias("entr"),
-        entropy_from_counts(n, xlog2x(n_le) + xlog2x(n_gt)).alias(
+        _split_info_col(n, xlog2x(n_le) + xlog2x(n_gt), unknown).alias(
             "split_info"
         ),
     ).where(
@@ -446,7 +534,7 @@ def _score_candidates(
         ).alias("best")
     )
     return (
-        best.join(F.broadcast(info_df), RID)
+        best.join(F.broadcast(info_df), keys)
         .select(
             RID,
             AID,
@@ -455,7 +543,10 @@ def _score_candidates(
             F.col("best.split_info").alias("split_info"),
             F.col(f"best.{VALUE}").alias("boundary"),
             _gain_ratio_col(
-                F.col("info"), F.col("best.entr"), F.col("best.split_info")
+                F.col("info"),
+                F.col("best.entr"),
+                F.col("best.split_info"),
+                known,
             ).alias("gain_ratio"),
         )
     )

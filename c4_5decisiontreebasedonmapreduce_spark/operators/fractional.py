@@ -1,9 +1,9 @@
 """True C4.5 fractional routing for missing values (Quinlan 1993 ch. 3).
 
 ``train(nulls="missing")`` approximates unknown values with a
-branch-as-category / median-impute policy; THIS module implements the
-actual C4.5 semantics the reference (which has no null concept at all —
-SURVEY §1.1) also lacks:
+branch-as-category / median-impute policy; ``train(nulls="fractional")``
+runs the actual C4.5 semantics the reference (which has no null concept
+at all — SURVEY §1.1) also lacks:
 
 - **Gain scaling**: an attribute's information gain at a node is computed
   over the rows whose value is KNOWN, then multiplied by the known
@@ -18,28 +18,24 @@ SURVEY §1.1) also lacks:
   the observed branch sizes, so leaf counts become fractional exactly as
   C4.5 prints them (e.g. ``(3.4/0.4)``).
 
-Weights are DECIMAL(28,12) throughout: every per-level contingency is a
-SUM of decimals, so masses are exact and order-independent — the same
-portability discipline as the engine's dot products, which is what keeps
-this trainer deterministic under any partitioning (pinned in
-tests/test_fractional.py, including bit-equality with the standard
-trainer on clean data, where every weight stays exactly 1).
+There is no second trainer: ``tree.train`` runs its one level loop with
+a row-weight column ``__w`` (DECIMAL(28,12)) whenever the prologue's
+null audit finds a NULL feature. The melt then keeps NULL values as
+their own group and the contingency sums weights instead of counting
+rows (:func:`c45_stats.mixed_contingency`); both stats reductions fold
+in the three terms above, each exactly neutral when an attribute has no
+unknown mass at a node (F = 1, an empty split-info branch), which is
+why a null-free table trains the standard model with the standard plan.
+Every contingency is a SUM of decimals, so masses are exact and
+order-independent — the model is deterministic under any partitioning
+(pinned in tests/test_fractional.py). The rid update
+(``tree._apply_splits``) fans a row with a NULL split attribute out over
+the per-parent ``(child id, multiplier)`` array :func:`_fan_out` builds;
+only those rows are exploded, so the extra rows are linear in missing
+values, never corpus-sized.
 
-Scale shape — identical to the main trainer's fast path: ONE data-sized
-map-side-combined exchange per level (the weighted melt/contingency,
-nulls kept as their own group so the unknown mass rides the same
-shuffle), an Arrow collect bounded by frontier × Σ domains × classes
-(data-volume independent), numpy reduction, and a routing projection in
-which only rows whose SPLIT attribute is null are exploded (|children|
-copies of just the unknown rows — linear in missing values, never
-corpus-sized). Past the Arrow bound (wide frontier × wide schema) the
-level switches to :func:`_distributed_fractional_stats` — the weighted
-twin of tree.py's distributed reduction (`tree.py:1130-1167`): the SAME
-melt exchange feeds JVM-side entropy aggregates, the collected result is
-frontier×attrs-sized, and the chosen splits' routing masses come from a
-winners-only second collect off the checkpointed contingency. Both paths
-are pinned rule-for-rule equal on the wide stress schema in
-tests/test_fractional.py.
+This module holds what only weighted training needs: the branch masses
+of the chosen splits on distributed levels and the fan-out multipliers.
 
 Prediction: the returned model is an ordinary :class:`DecisionListModel`
 whose rule predicates test concrete values, so ``transform`` leaves rows
@@ -50,442 +46,14 @@ routing is what shapes the model).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from c4_5decisiontreebasedonmapreduce_spark.operators import c45_stats as S
-from c4_5decisiontreebasedonmapreduce_spark.operators.tree import (
-    _DRIVER_STATS_MAX_ROWS,
-    Condition,
-    DecisionListModel,
-    Rule,
-    _decide_level,
-    _entropy_np,
-    _gain_ratio_py,
-    _prologue_scan,
-    _snap_numeric,
-    _xlog2x_np,
-)
-from c4_5decisiontreebasedonmapreduce_spark.operators.training import (
-    TrainingSchema,
-)
 
 W = "__w"  # the fractional weight column
-_W_TYPE = "decimal(28,12)"
-
-
-def _melt_weighted(
-    df: DataFrame,
-    cat_names: list[str],
-    num_names: list[str],
-    label: str,
-) -> DataFrame:
-    """melt_mixed's weighted sibling: ``(rid, aid, value_s, value_d,
-    class, wsum)`` with NULL attribute values KEPT as their own group —
-    that group's mass is the per-(node, attribute) unknown weight the
-    fractional formulas need. One map-side-combined exchange."""
-    entries = [f"'{S.CC_AID}', cast(null as string), cast(null as double)"]
-    for a in cat_names:
-        entries.append(f"'{a}', cast(`{a}` as string), cast(null as double)")
-    for a in num_names:
-        entries.append(f"'{a}', cast(null as string), cast(`{a}` as double)")
-    stacked = df.selectExpr(
-        f"`{S.RID}` as {S.RID}",
-        f"stack({len(entries)}, {', '.join(entries)})"
-        " as (aid, value_s, value_d)",
-        f"`{label}` as {S.CLASS}",
-        f"`{W}` as {W}",
-    )
-    return stacked.groupBy(
-        S.RID, S.AID, "value_s", "value_d", S.CLASS
-    ).agg(F.sum(W).alias("wsum"))
-
-
-def _fractional_level_stats(
-    pdf,
-    *,
-    cat_names: list[str],
-    num_names: list[str],
-    label_domain: list[str],
-    min_ratio: float,
-):
-    """Quinlan-fractional gain ratios from one level's weighted
-    contingency. Mirrors tree._driver_level_stats formula-for-formula,
-    with three deliberate differences (all no-ops when nothing is
-    missing, which is what makes the clean-data model bit-equal):
-    per-attribute node info is computed over the KNOWN rows only, the
-    gain is scaled by the known fraction F, and the unknown mass joins
-    the split-info branches. Returns ``(hist, stats, masses)`` where
-    ``masses[(rid, aid)]`` carries the per-branch known masses the
-    router needs for the fractional distribution."""
-    classes = list(label_domain)
-    cidx = {c: i for i, c in enumerate(classes)}
-    k = len(classes)
-
-    hist: dict[int, dict[str, float]] = {}
-    cc = pdf[pdf[S.AID] == S.CC_AID]
-    for rid, cls, wsum in zip(cc[S.RID], cc[S.CLASS], cc["wsum"]):
-        hist.setdefault(int(rid), {})[cls] = float(wsum)
-
-    stats: dict[int, list] = {}
-    masses: dict[tuple[int, str], dict] = {}
-
-    def emit(rid, aid, gr, boundary):
-        stats.setdefault(rid, []).append(
-            {S.AID: aid, "gain_ratio": gr, "boundary": boundary}
-        )
-
-    if cat_names:
-        sub = pdf[pdf[S.AID].isin(cat_names)]
-        for (rid, aid), g in sub.groupby([S.RID, S.AID], sort=False):
-            rid = int(rid)
-            known = g[g["value_s"].notna()]
-            unknown = float(g[g["value_s"].isna()]["wsum"].sum())
-            if len(known) == 0:
-                continue  # attribute entirely unknown here: no split
-            vals, inv = np.unique(
-                known["value_s"].to_numpy(), return_inverse=True
-            )
-            g_classes, gci = np.unique(
-                known[S.CLASS].to_numpy(), return_inverse=True
-            )
-            mat = np.zeros((len(vals), len(g_classes)), dtype=np.float64)
-            np.add.at(
-                mat, (inv, gci), known["wsum"].to_numpy(dtype=np.float64)
-            )
-            nv = mat.sum(axis=1)
-            n_known = float(nv.sum())
-            f_known = n_known / (n_known + unknown)
-            info_known = _entropy_np(
-                n_known, _xlog2x_np(mat.sum(axis=0)).sum()
-            )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ent_v = np.where(
-                    nv > 0,
-                    np.log2(np.where(nv > 0, nv, 1.0))
-                    - _xlog2x_np(mat).sum(axis=1) / np.where(nv > 0, nv, 1.0),
-                    0.0,
-                )
-            entr = float((nv * ent_v).sum() / n_known)
-            branches = np.concatenate([nv, [unknown]])
-            split_info = _entropy_np(
-                n_known + unknown, _xlog2x_np(branches).sum()
-            )
-            gr = _gain_ratio_py(info_known, entr, split_info)
-            emit(rid, aid, f_known * gr, None)
-            masses[(rid, aid)] = {
-                "kind": "cat",
-                "by_value": dict(zip(vals.tolist(), nv.tolist())),
-                "n_known": n_known,
-            }
-
-    if num_names:
-        sub = pdf[
-            pdf[S.AID].isin(num_names) & pdf[S.CLASS].isin(cidx)
-        ]
-        for (rid, aid), g in sub.groupby([S.RID, S.AID], sort=False):
-            rid = int(rid)
-            known = g[g["value_d"].notna()]
-            unknown = float(g[g["value_d"].isna()]["wsum"].sum())
-            if len(known) == 0:
-                continue
-            vals, inv = np.unique(
-                known["value_d"].to_numpy(), return_inverse=True
-            )
-            mat = np.zeros((len(vals), k), dtype=np.float64)
-            ci = np.fromiter(
-                (cidx[c] for c in known[S.CLASS]),
-                dtype=np.int64,
-                count=len(known),
-            )
-            np.add.at(mat, (inv, ci), known["wsum"].to_numpy(np.float64))
-            cum = np.cumsum(mat, axis=0)
-            tot = cum[-1]
-            n = float(tot.sum())
-            f_known = n / (n + unknown)
-            n_le = cum.sum(axis=1)
-            n_gt = n - n_le
-            mask = (
-                (n_le < n)
-                & (n_le >= min_ratio * n)
-                & (n_gt >= min_ratio * n)
-            )
-            if not mask.any():
-                continue
-            info_known = _entropy_np(n, _xlog2x_np(tot).sum())
-            sum_x_le = _xlog2x_np(cum).sum(axis=1)
-            sum_x_gt = _xlog2x_np(tot[None, :] - cum).sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ent_le = np.where(
-                    n_le > 0,
-                    np.log2(np.where(n_le > 0, n_le, 1.0))
-                    - sum_x_le / np.where(n_le > 0, n_le, 1.0),
-                    0.0,
-                )
-                ent_gt = np.where(
-                    n_gt > 0,
-                    np.log2(np.where(n_gt > 0, n_gt, 1.0))
-                    - sum_x_gt / np.where(n_gt > 0, n_gt, 1.0),
-                    0.0,
-                )
-            entr = (n_le * ent_le + n_gt * ent_gt) / n
-            # three-way split info: ≤, >, unknown (zero mass vanishes —
-            # xlog2x(0) = 0 — which is the clean-data equality)
-            total_w = n + unknown
-            split_info = np.log2(total_w) - (
-                _xlog2x_np(n_le)
-                + _xlog2x_np(n_gt)
-                + _xlog2x_np(np.full_like(n_le, unknown))
-            ) / total_w
-            ci_mask = np.flatnonzero(mask)
-            best_local = ci_mask[np.argmin(entr[ci_mask])]
-            gr = _gain_ratio_py(
-                info_known,
-                float(entr[best_local]),
-                float(split_info[best_local]),
-            )
-            emit(rid, aid, f_known * gr, float(vals[best_local]))
-            masses[(rid, aid)] = {
-                "kind": "num",
-                "values": vals.tolist(),
-                "n_le": n_le.tolist(),
-                "n_known": n,
-            }
-
-    return hist, stats, masses
-
-
-def _distributed_fractional_stats(
-    wcont: DataFrame,
-    *,
-    cat_names: list[str],
-    num_names: list[str],
-    label_domain: list[str],
-    min_ratio: float,
-):
-    """The weighted distributed reduction — `tree._level_rels`' shape
-    (class histograms + categorical gain ratios + numeric best-splits
-    unioned into ONE collected action) with ``SUM(w)`` in place of
-    ``COUNT(*)`` and the three Quinlan-fractional differences of
-    :func:`_fractional_level_stats`: per-attribute Info over KNOWN rows
-    only, gain scaled by the known fraction F, and the unknown mass as
-    one extra split-info branch. Collected output is ≤
-    |frontier|·(|attrs|+|classes|) rows — data-volume independent — so
-    this path has no driver bound; it is the wide-frontier fallback the
-    standard trainer already had (`tree.py:1130-1167`). Pinned
-    rule-for-rule equal to the driver path in tests/test_fractional.py
-    (same 1e-10 argmax quantization as the standard pair)."""
-    from c4_5decisiontreebasedonmapreduce_spark.functions.entropy import (
-        entropy_from_counts,
-        xlog2x,
-    )
-
-    w_d = F.col("wsum").cast("double")
-    none_d = F.lit(None).cast("double")
-    rels = [
-        wcont.where(F.col(S.AID) == S.CC_AID).select(
-            F.lit("cc").alias("kind"),
-            S.RID,
-            F.col(S.CLASS).alias(S.AID),
-            w_d.alias("gain_ratio"),
-            none_d.alias("boundary"),
-        )
-    ]
-    if cat_names:
-        catk = wcont.where(F.col(S.AID).isin(cat_names))
-        unk = (
-            catk.where(F.col("value_s").isNull())
-            .groupBy(S.RID, S.AID)
-            .agg(F.sum(w_d).alias("unknown"))
-        )
-        known = catk.where(F.col("value_s").isNotNull())
-        per_value = known.groupBy(S.RID, S.AID, "value_s").agg(
-            F.sum(w_d).alias("nv"),
-            entropy_from_counts(F.sum(w_d), F.sum(xlog2x(w_d))).alias(
-                "ent_v"
-            ),
-        )
-        per_attr = per_value.groupBy(S.RID, S.AID).agg(
-            F.sum("nv").alias("n_known"),
-            (F.sum(F.col("nv") * F.col("ent_v")) / F.sum("nv")).alias(
-                "entr"
-            ),
-            F.sum(xlog2x(F.col("nv"))).alias("xl_known"),
-        )
-        info_attr = (
-            known.groupBy(S.RID, S.AID, S.CLASS)
-            .agg(F.sum(w_d).alias("wc"))
-            .groupBy(S.RID, S.AID)
-            .agg(
-                entropy_from_counts(
-                    F.sum("wc"), F.sum(xlog2x(F.col("wc")))
-                ).alias("info")
-            )
-        )
-        j = (
-            per_attr.join(info_attr, [S.RID, S.AID])
-            .join(unk, [S.RID, S.AID], "left")
-            .withColumn("unknown", F.coalesce("unknown", F.lit(0.0)))
-        )
-        total_w = F.col("n_known") + F.col("unknown")
-        split_info = entropy_from_counts(
-            total_w, F.col("xl_known") + xlog2x(F.col("unknown"))
-        )
-        rels.append(
-            j.select(
-                F.lit("st").alias("kind"),
-                S.RID,
-                S.AID,
-                (
-                    (F.col("n_known") / total_w)
-                    * S._gain_ratio_col(
-                        F.col("info"), F.col("entr"), split_info
-                    )
-                ).alias("gain_ratio"),
-                none_d.alias("boundary"),
-            )
-        )
-    if num_names:
-        from pyspark.sql import Window
-
-        numk = wcont.where(
-            F.col(S.AID).isin(num_names)
-            & F.col(S.CLASS).isin(list(label_domain))
-        )
-        unk = (
-            numk.where(F.col("value_d").isNull())
-            .groupBy(S.RID, S.AID)
-            .agg(F.sum(w_d).alias("unknown"))
-        )
-        classes = [f"c{i}" for i in range(len(label_domain))]
-        matrix = (
-            numk.where(F.col("value_d").isNotNull())
-            .groupBy(S.RID, S.AID, F.col("value_d").alias(S.VALUE))
-            .pivot(S.CLASS, list(label_domain))
-            .agg(F.sum(w_d))
-            .select(
-                S.RID,
-                S.AID,
-                S.VALUE,
-                *[
-                    F.coalesce(F.col(f"`{lab}`"), F.lit(0.0)).alias(c)
-                    for c, lab in zip(classes, label_domain)
-                ],
-            )
-        )
-        # quantile binning caps each (rid, aid) group at max_bins rows,
-        # so the plain per-group window is right here — same reasoning
-        # as the standard trainer's bucketed=False call
-        w_cum = (
-            Window.partitionBy(S.RID, S.AID)
-            .orderBy(S.VALUE)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_all = Window.partitionBy(S.RID, S.AID)
-        cum = matrix.select(
-            S.RID,
-            S.AID,
-            S.VALUE,
-            *[F.sum(c).over(w_cum).alias(f"le_{c}") for c in classes],
-            *[F.sum(c).over(w_all).alias(f"tot_{c}") for c in classes],
-        )
-        n_le = sum(F.col(f"le_{c}") for c in classes)
-        n = sum(F.col(f"tot_{c}") for c in classes)
-        scored = (
-            cum.withColumn("n_le", n_le)
-            .withColumn("n", n)
-            .withColumn("n_gt", F.col("n") - F.col("n_le"))
-            .where(
-                (F.col("n_le") < F.col("n"))
-                & (F.col("n_le") >= min_ratio * F.col("n"))
-                & (F.col("n_gt") >= min_ratio * F.col("n"))
-            )
-            .withColumn(
-                "ent_le",
-                entropy_from_counts(
-                    F.col("n_le"),
-                    sum(xlog2x(F.col(f"le_{c}")) for c in classes),
-                ),
-            )
-            .withColumn(
-                "ent_gt",
-                entropy_from_counts(
-                    F.col("n_gt"),
-                    sum(
-                        xlog2x(F.col(f"tot_{c}") - F.col(f"le_{c}"))
-                        for c in classes
-                    ),
-                ),
-            )
-            .withColumn(
-                "info",
-                entropy_from_counts(
-                    F.col("n"),
-                    sum(xlog2x(F.col(f"tot_{c}")) for c in classes),
-                ),
-            )
-            .withColumn(
-                "entr",
-                (
-                    F.col("n_le") * F.col("ent_le")
-                    + F.col("n_gt") * F.col("ent_gt")
-                )
-                / F.col("n"),
-            )
-        )
-        # the driver path's argmin: min conditional entropy, smallest
-        # boundary on ties (np.argmin picks the first of sorted values)
-        w_rank = Window.partitionBy(S.RID, S.AID).orderBy("entr", S.VALUE)
-        best = (
-            scored.withColumn("rn", F.row_number().over(w_rank))
-            .where(F.col("rn") == 1)
-            .join(unk, [S.RID, S.AID], "left")
-            .withColumn("unknown", F.coalesce("unknown", F.lit(0.0)))
-        )
-        total_w = F.col("n") + F.col("unknown")
-        split_info = (
-            F.log2(total_w)
-            - (
-                xlog2x(F.col("n_le"))
-                + xlog2x(F.col("n_gt"))
-                + xlog2x(F.col("unknown"))
-            )
-            / total_w
-        )
-        rels.append(
-            best.select(
-                F.lit("st").alias("kind"),
-                S.RID,
-                S.AID,
-                (
-                    (F.col("n") / total_w)
-                    * S._gain_ratio_col(
-                        F.col("info"), F.col("entr"), split_info
-                    )
-                ).alias("gain_ratio"),
-                F.col(S.VALUE).alias("boundary"),
-            )
-        )
-    out = rels[0]
-    for r in rels[1:]:
-        out = out.unionByName(r)
-    hist: dict[int, dict[str, float]] = {}
-    stats: dict[int, list] = {}
-    for row in out.collect():
-        if row["kind"] == "cc":
-            hist.setdefault(row[S.RID], {})[row[S.AID]] = float(
-                row["gain_ratio"]
-            )
-        else:
-            stats.setdefault(row[S.RID], []).append(
-                {
-                    S.AID: row[S.AID],
-                    "gain_ratio": float(row["gain_ratio"]),
-                    "boundary": row["boundary"],
-                }
-            )
-    return hist, stats
+W_TYPE = "decimal(28,12)"
+MUL_TYPE = "decimal(18,12)"  # a fan-out multiplier
 
 
 def _collect_split_masses(
@@ -494,17 +62,15 @@ def _collect_split_masses(
     label_domain: list[str],
 ) -> dict[tuple[int, str], dict]:
     """Per-branch known masses for the CHOSEN split of each node — the
-    only masses :func:`_route_fractional` ever reads, so the distributed
-    path collects winners-only: ≤ |frontier|·max(|domain|, 1) rows, not
-    the full contingency that tripped the driver bound. One broadcast
-    join of the (rid, aid, boundary) winners relation against the
+    only masses :func:`_fan_out` ever reads, so a distributed level
+    collects winners-only: ≤ |frontier|·max(|domain|, 1) rows, not the
+    full contingency that tripped the driver bound. One broadcast join
+    of the (rid, aid, boundary) winners relation against the
     checkpointed weighted contingency, two bounded collects."""
     spark = wcont.sparkSession
-    w_d = F.col("wsum").cast("double")
+    w_d = F.col(S.CNT).cast("double")
     cat_pairs = [
-        (p, ch[0][0].attr)
-        for p, ch in splits
-        if ch[0][0].value is not None and ch[0][0].op == "=="
+        (p, ch[0][0].attr) for p, ch in splits if ch[0][0].op == "=="
     ]
     num_pairs = [
         (p, ch[0][0].attr, float(ch[0][0].value))
@@ -525,8 +91,7 @@ def _collect_split_masses(
         )
         for r in rows:
             m = masses.setdefault(
-                (r[S.RID], r[S.AID]),
-                {"kind": "cat", "by_value": {}, "n_known": 0.0},
+                (r[S.RID], r[S.AID]), {"by_value": {}, "n_known": 0.0}
             )
             m["by_value"][r["value_s"]] = float(r["nv"])
             m["n_known"] += float(r["nv"])
@@ -551,191 +116,27 @@ def _collect_split_masses(
         )
         for r in rows:
             masses[(r[S.RID], r[S.AID])] = {
-                "kind": "num",
-                "values": [float(r["bnd"])],
-                "n_le": [float(r["w_le"] or 0.0)],
+                "n_le": float(r["w_le"] or 0.0),
                 "n_known": float(r["n_known"]),
             }
     return masses
 
 
-def _route_fractional(
-    level: DataFrame,
-    splits: list[tuple[int, list]],
-    masses: dict[tuple[int, str], dict],
-) -> DataFrame:
-    """The fractional router: known rows follow their branch with weight
-    unchanged; a row whose split attribute is NULL fans out to every
-    child with weight ``w · W_child / W_known``. Only null-attribute
-    rows are exploded; everything stays a projection."""
-    route_t = "array<struct<cid:int,mul:decimal(18,12)>>"
-    parts = []
-    for parent, children in splits:
-        aid = children[0][0].attr
-        m = masses[(parent, aid)]
-        fracs = []
-        for cond, cid in children:
-            if m["kind"] == "cat":
-                child_w = m["by_value"].get(cond.value, 0.0)
-            elif cond.op == "<=":
-                i = m["values"].index(cond.value)
-                child_w = m["n_le"][i]
-            else:
-                i = m["values"].index(cond.value)
-                child_w = m["n_known"] - m["n_le"][i]
-            fracs.append((cid, round(child_w / m["n_known"], 12)))
-        unknown_routes = F.array(
-            *[
-                F.struct(
-                    F.lit(cid).cast("int").alias("cid"),
-                    F.lit(f"{frac:.12f}").cast("decimal(18,12)").alias("mul"),
-                )
-                for cid, frac in fracs
-                if frac > 0
-            ]
-        ).cast(route_t)
-        known_cid = None
-        for cond, cid in children:
-            known_cid = (F.when if known_cid is None else known_cid.when)(
-                cond.column(), F.lit(cid)
-            )
-        known_routes = F.array(
-            F.struct(
-                known_cid.cast("int").alias("cid"),
-                F.lit(1).cast("decimal(18,12)").alias("mul"),
-            )
-        ).cast(route_t)
-        parts.append(
-            F.when(
-                F.col(S.RID) == parent,
-                F.when(F.col(aid).isNull(), unknown_routes).otherwise(
-                    known_routes
-                ),
-            )
-        )
-    routed = level.withColumn("__routes", F.coalesce(*parts)).select(
-        *[c for c in level.columns if c not in (S.RID, W)],
-        F.explode("__routes").alias("__r"),
-        W,
-    )
-    return (
-        routed.select(
-            *[c for c in routed.columns if c not in ("__r", W)],
-            F.col("__r.cid").alias(S.RID),
-            (F.col(W) * F.col("__r.mul")).cast(_W_TYPE).alias(W),
-        )
-        .where(F.col(S.RID).isNotNull())
-    )
-
-
-def train_fractional(
-    df: DataFrame,
-    schema: TrainingSchema,
-    max_depth: int = 8,
-    min_ratio: float = 0.1,
-    min_rows: int = 2,
-    cache: bool = True,
-    max_bins: int = 256,
-    driver_stats_max_rows: int = _DRIVER_STATS_MAX_ROWS,
-) -> DecisionListModel:
-    """Grow a C4.5 decision list with Quinlan-fractional missing-value
-    semantics (module docstring). On data with no nulls the returned
-    model is rule-for-rule identical to ``train(df, schema, ...)``."""
-    attr_order = [a.name for a in schema.features]
-    cat_names = [a.name for a in schema.categorical]
-    num_names = [a.name for a in schema.numeric]
-    cat_domains = {a.name: list(a.domain) for a in schema.categorical}
-    label_domain = list(schema.label_domain)
-
-    spark = df.sparkSession
-    base = df.select(*attr_order, schema.label)
-    # the shared one-scan prologue in audit-only mode: quantile edges
-    # over known values; nulls stay null (no imputation — routing is
-    # this trainer's whole point). A null LABEL is still an error.
-    base, edges = _prologue_scan(
-        base,
-        nulls="fractional",
-        cat_names=cat_names,
-        num_names=num_names,
-        label=schema.label,
-        cat_domains=cat_domains,
-        max_bins=max_bins,
-    )
-    if cache:
-        par = spark.sparkContext.defaultParallelism
-        if base.rdd.getNumPartitions() < par:
-            base = base.repartition(par)
-    base = _snap_numeric(base, edges)
-
-    stat_rows_per_node = len(label_domain) * (
-        1
-        + sum(len(d) + 1 for d in cat_domains.values())
-        + sum(len(e) + 1 for e in edges.values())
-    )
-
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key)
-    model = DecisionListModel(rules=[], label_col=schema.label)
-    frontier: list[Rule] = [Rule()]
-    level = base.withColumn(S.RID, F.lit(0).cast("int")).withColumn(
-        W, F.lit(1).cast(_W_TYPE)
-    )
-    if cache:
-        level = level.localCheckpoint(eager=True)
-    decide_kw = dict(
-        attr_order=attr_order,
-        cat_domains=cat_domains,
-        label_domain=label_domain,
-        max_depth=max_depth,
-        min_rows=min_rows,
-    )
-    try:
-        spark.conf.set(shuffle_key, "8")
-        while frontier:
-            bound = len(frontier) * stat_rows_per_node
-            if bound <= driver_stats_max_rows:
-                # bounded-contingency fast path (tree.py's Arrow shape)
-                pdf = _melt_weighted(
-                    level, cat_names, num_names, schema.label
-                ).toPandas()
-                pdf["wsum"] = pdf["wsum"].astype(np.float64)
-                hist, stats, masses = _fractional_level_stats(
-                    pdf,
-                    cat_names=cat_names,
-                    num_names=num_names,
-                    label_domain=label_domain,
-                    min_ratio=min_ratio,
-                )
-            else:
-                # wide-frontier fallback: the weighted distributed
-                # reduction (same one-exchange melt; the contingency is
-                # checkpointed because the winners' routing masses are
-                # collected from it AFTER the split decision — winners
-                # only, so that second collect is frontier-bounded, not
-                # contingency-sized)
-                wcont = _melt_weighted(
-                    level, cat_names, num_names, schema.label
-                ).localCheckpoint(eager=False)
-                hist, stats = _distributed_fractional_stats(
-                    wcont,
-                    cat_names=cat_names,
-                    num_names=num_names,
-                    label_domain=label_domain,
-                    min_ratio=min_ratio,
-                )
-                masses = None
-            if frontier[0].depth >= max_depth:
-                stats = {}
-            frontier, splits = _decide_level(
-                model, frontier, hist, stats, **decide_kw
-            )
-            if not frontier:
-                break
-            if masses is None:
-                masses = _collect_split_masses(wcont, splits, label_domain)
-            level = _route_fractional(level, splits, masses)
-            if cache:
-                level = level.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(shuffle_key, prev_shuffle)
-    return model
+def _fan_out(children: list, m: dict) -> list[tuple[int, float]]:
+    """``(child id, W_child / W_known)`` for every child that receives
+    mass from a row whose split attribute is unknown, the multiplier
+    rounded to its DECIMAL(18,12) digits. ``m`` is one chosen split's
+    masses: ``by_value`` per categorical value, or the numeric ``<=``
+    side's ``n_le``; ``n_known`` either way."""
+    fan = []
+    for cond, cid in children:
+        if "by_value" in m:
+            child_w = m["by_value"].get(cond.value, 0.0)
+        elif cond.op == "<=":
+            child_w = m["n_le"]
+        else:
+            child_w = m["n_known"] - m["n_le"]
+        frac = round(child_w / m["n_known"], 12)
+        if frac > 0:
+            fan.append((cid, frac))
+    return fan

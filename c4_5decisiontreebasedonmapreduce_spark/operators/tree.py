@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from c4_5decisiontreebasedonmapreduce_spark.operators import c45_stats as S
+from c4_5decisiontreebasedonmapreduce_spark.operators import fractional as FR
 from c4_5decisiontreebasedonmapreduce_spark.sources.tsv import TrainingSchema
 
 OP_EQ, OP_LE, OP_GT = "==", "<=", ">"
@@ -82,13 +83,15 @@ class Rule:
 
     conditions: tuple[Condition, ...] = ()
     label: str | None = None
-    n: int = 0
+    n: int | float = 0  # rows; a float mass under nulls='fractional'
     depth: int = 0
     # training class histogram at the leaf, sorted by label — carried
     # only on freshly trained models (compare=False keeps rule equality,
     # and every serde wire format, unchanged). Error-based pruning
     # (operators/pruning.py) needs it to pool sibling distributions.
-    hist: tuple[tuple[str, int], ...] = field(default=(), compare=False)
+    hist: tuple[tuple[str, int | float], ...] = field(
+        default=(), compare=False
+    )
 
     def predicate(self) -> Column:
         col = F.lit(True)
@@ -164,7 +167,11 @@ class DecisionListModel:
         """The model as a relation — one row per rule, ``rule_id``
         carrying the list position so a columnar roundtrip
         (:meth:`save_parquet` / :meth:`load_parquet`) reconstructs the
-        decision list deterministically regardless of file/row order."""
+        decision list deterministically regardless of file/row order.
+        ``n`` is BIGINT for row counts and DOUBLE once any rule carries a
+        fractional mass (``nulls='fractional'``), so both read back
+        exactly, as the same Python type."""
+        counts = all(isinstance(r.n, int) for r in self.rules)
         schema = T.StructType(
             [
                 T.StructField("rule_id", T.IntegerType()),
@@ -181,7 +188,7 @@ class DecisionListModel:
                     ),
                 ),
                 T.StructField("label", T.StringType()),
-                T.StructField("n", T.LongType()),
+                T.StructField("n", T.LongType() if counts else T.DoubleType()),
                 T.StructField("depth", T.IntegerType()),
             ]
         )
@@ -190,7 +197,7 @@ class DecisionListModel:
                 i,
                 [(c.attr, c.op, str(c.value)) for c in r.conditions],
                 r.label,
-                r.n,
+                r.n if counts else float(r.n),
                 r.depth,
             )
             for i, r in enumerate(self.rules)
@@ -495,16 +502,18 @@ def _prologue_scan(
     cat_domains: dict[str, list[str]],
     max_bins: int,
     apply_to=None,
-) -> tuple[DataFrame, dict[str, list[float]]]:
+) -> tuple[DataFrame, dict[str, list[float]], dict[str, int]]:
     """ONE multi-aggregate job over the training projection computing
     everything ``train()`` needs before level 0: per-column null counts
     (the missing-value audit), and per-numeric-attribute quantile split
     candidates (GK sketches via ``percentile_approx``, whose 0.5 entry
     doubles as the imputation median under ``nulls='missing'``).
 
-    Returns ``(base', edges)`` where ``base'`` has the null policy
-    applied (untouched when clean — bit-identical plan) and ``edges``
-    maps each numeric attribute to ≤ max_bins+1 candidate boundaries.
+    Returns ``(base', edges, dirty)`` where ``base'`` has the null
+    policy applied (untouched when clean — bit-identical plan),
+    ``edges`` maps each numeric attribute to ≤ max_bins+1 candidate
+    boundaries, and ``dirty`` maps each feature holding NULLs to its
+    null count.
 
     At 100 TB this is THE scan that matters: the previous design paid
     three full corpus passes before level 0 (null audit, row count,
@@ -566,8 +575,8 @@ def _prologue_scan(
     dirty = {c: n for c, n in counts.items() if c != label and n > 0}
     if not dirty or nulls == "fractional":
         # fractional (operators/fractional.py) keeps nulls null — the
-        # router distributes their weight; edges over known values
-        return base, edges
+        # rid update distributes their weight; edges over known values
+        return base, edges, dirty
     if nulls == "reject":
         raise ValueError(
             "training features contain NULLs "
@@ -590,7 +599,7 @@ def _prologue_scan(
         base = base.fillna(
             {c: float(quants[c][med_idx]) for c in num_dirty}
         )
-    return base, edges
+    return base, edges, dirty
 
 
 def _rid_column(frontier: list[Rule]) -> Column:
@@ -687,15 +696,17 @@ def train(
     categorical nulls their own ``__missing__`` branch (appended to the
     declared domain, so the tree can SPLIT on missingness — it is often
     informative) and median-imputes numeric nulls (a null carries no
-    ordering information for a threshold split); ``"fractional"``
-    dispatches to :func:`operators.fractional.train_fractional` — the
-    actual Quinlan C4.5 semantics: known-fraction gain scaling, an
-    unknown pseudo-branch in the split information, and rows with an
-    unknown split attribute routed to every child with weight
-    proportional to the observed branch masses. A label null is always
-    an error. With no nulls present, all three policies leave the data,
-    domains, and resulting model identical (fractional: rule-for-rule,
-    pinned in tests/test_fractional.py).
+    ordering information for a threshold split); ``"fractional"`` runs
+    the actual Quinlan C4.5 semantics (operators/fractional.py):
+    known-fraction gain scaling, an unknown pseudo-branch in the split
+    information, and rows with an unknown split attribute routed to
+    every child with weight proportional to the observed branch masses,
+    so leaf ``n`` and ``hist`` become fractional masses. It grows the
+    tree in this same level loop, with a row-weight column added only
+    when the prologue finds a NULL feature. A label null is always an
+    error. With no nulls present, all three policies leave the data,
+    domains, plan and resulting model identical (pinned in
+    tests/test_fractional.py).
 
     One Spark action and ONE data-sized exchange per level: the mixed
     melt + grouped count; class histograms, categorical gain ratios and
@@ -712,29 +723,12 @@ def train(
         )
 
         return train_reference_compat(df, schema)
-    if nulls == "fractional":
-        # true C4.5 missing-value semantics: known-fraction gain scaling,
-        # unknown split-info branch, weight-proportional routing
-        # (operators/fractional.py). Pruning operates on integer leaf
-        # histograms, so the combination is rejected rather than wrong.
-        if prune:
-            raise ValueError(
-                "prune=True is not supported with nulls='fractional' "
-                "(EBP needs integer leaf histograms)"
-            )
-        from c4_5decisiontreebasedonmapreduce_spark.operators.fractional import (
-            train_fractional,
-        )
-
-        return train_fractional(
-            df,
-            schema,
-            max_depth=max_depth,
-            min_ratio=min_ratio,
-            min_rows=min_rows,
-            cache=cache,
-            max_bins=max_bins,
-            driver_stats_max_rows=driver_stats_max_rows,
+    if nulls == "fractional" and prune:
+        # pruning operates on integer leaf histograms, so the combination
+        # is rejected rather than wrong
+        raise ValueError(
+            "prune=True is not supported with nulls='fractional' "
+            "(EBP needs integer leaf histograms)"
         )
     attr_order = [a.name for a in schema.features]
     cat_names = [a.name for a in schema.categorical]
@@ -777,14 +771,18 @@ def train(
             raw_fut = pool.submit(
                 lambda: spread.localCheckpoint(eager=True)
             )
-            base, edges = _prologue_scan(
+            base, edges, dirty = _prologue_scan(
                 base, apply_to=raw_fut.result, **prologue_kw
             )
         finally:
             pool.shutdown(wait=True)
     else:
-        base, edges = _prologue_scan(base, **prologue_kw)
+        base, edges, dirty = _prologue_scan(base, **prologue_kw)
     base = _snap_numeric(base, edges)
+    # Quinlan-fractional rows carry a weight only when some feature is
+    # NULL: a clean table keeps the count(*) plan and its rid update
+    weight = FR.W if nulls == "fractional" and dirty else None
+    unknown = set(dirty) if weight else set()
 
     # per-level shuffles carry combined counts (≤ nodes×attrs×bins rows);
     # a handful of reduce partitions beats the session default — AQE
@@ -806,6 +804,8 @@ def train(
     # checkpoint for the same reason). Leaf rows drop out as they
     # resolve, so later levels scan strictly less data.
     level = base.withColumn(S.RID, F.lit(0).cast("int"))
+    if weight:
+        level = level.withColumn(weight, F.lit(1).cast(FR.W_TYPE))
     if cache:
         # eager: folding this materialization into level 0's action was
         # measured neutral-to-worse; the separate job keeps the first
@@ -820,11 +820,12 @@ def train(
     # contingency still keeps those rows, so the realized transfer is
     # this same product with the TRUE class count — still
     # frontier × domain-sized, never data-sized; the guard's purpose
-    # (bounding the Arrow collect) holds either way.
+    # (bounding the Arrow collect) holds either way. An attribute with
+    # unknown mass adds its NULL group.
     stat_rows_per_node = len(label_domain) * (
         1
-        + sum(len(d) for d in cat_domains.values())
-        + sum(len(e) for e in edges.values())
+        + sum(len(d) + (a in unknown) for a, d in cat_domains.items())
+        + sum(len(e) + (a in unknown) for a, e in edges.items())
     )
 
     try:
@@ -845,6 +846,7 @@ def train(
             cache=cache,
             stat_rows_per_node=stat_rows_per_node,
             driver_stats_max_rows=driver_stats_max_rows,
+            weight=weight,
         )
     finally:
         spark.conf.set(shuffle_key, prev_shuffle)
@@ -862,6 +864,7 @@ def train(
 
 def _level_rels(
     level: DataFrame,
+    cont: DataFrame | None,
     *,
     cat_names: list[str],
     num_names: list[str],
@@ -869,21 +872,29 @@ def _level_rels(
     label_domain: list[str],
     min_ratio: float,
     hist_only: bool,
+    weight: str | None = None,
 ) -> list[DataFrame]:
     """One level's statistics relations, uniformly projected to
     ``(kind, rid, aid, gain_ratio, boundary)`` so class histograms,
-    categorical gain ratios and numeric best-splits all ride ONE action.
+    categorical gain ratios and numeric best-splits all ride ONE action,
+    reduced from the level's contingency ``cont``.
 
     ``hist_only`` (every node at this level is leaf-bound, i.e. the
     max-depth level) skips the attribute melt entirely: the deepest
     level has the widest frontier, so this drops the single largest
     shuffle of the whole training run down to a plain
     ``groupBy(rid, class)`` — the melt multiplies rows by |attrs|+1,
-    and none of those stats can ever be used at a depth-capped node."""
+    and none of those stats can ever be used at a depth-capped node.
+
+    With a row ``weight`` (Quinlan-fractional), ``cont`` holds DECIMAL
+    masses with NULL values as their own groups; the reductions read
+    the masses as doubles and take their Info, unknown mass and known
+    fraction per (node, attribute) from :func:`c45_stats.attribute_info`."""
     none_d = F.lit(None).cast("double")
     if hist_only:
+        mass = F.sum(weight) if weight else F.count("*")
         cc = level.groupBy(S.RID, F.col(label).alias(S.CLASS)).agg(
-            F.count("*").alias(S.CNT)
+            mass.alias(S.CNT)
         )
         return [
             cc.select(
@@ -894,13 +905,17 @@ def _level_rels(
                 none_d.alias("boundary"),
             )
         ]
-    cont = S.mixed_contingency(
-        S.melt_mixed(level, cat_names, num_names, label)
-    )
+    info_df = None
+    if weight:
+        cont = cont.withColumn(S.CNT, F.col(S.CNT).cast("double"))
+        info_df = S.attribute_info(cont, cat_names, label_domain)
+        # the stats builders see known values only, as unweighted
+        cont = S._drop_unknown(cont)
     cc_counts = cont.where(F.col(S.AID) == S.CC_AID).select(
         S.RID, S.CLASS, S.CNT
     )
-    info_df = S.node_info(cc_counts)  # broadcast — reused by both stats
+    if info_df is None:
+        info_df = S.node_info(cc_counts)  # broadcast — reused by both stats
     rels = [
         cc_counts.select(
             F.lit("cc").alias("kind"),
@@ -945,7 +960,7 @@ def _level_rels(
 def _decide_level(
     model: "DecisionListModel",
     frontier: list["Rule"],
-    hist: dict[int, dict[str, int]],
+    hist: dict[int, dict[str, int | float]],
     stats: dict[int, list],
     *,
     attr_order: list[str],
@@ -962,7 +977,11 @@ def _decide_level(
     child level's statistics, so structure and stats can never disagree.
     Otherwise the classic driver-side argmax runs: gain_ratio > 0 only
     (the reference inits maxGR = 0, `Main.java:258-261`), skipping
-    attributes exhausted by the rule, ties by declaration order."""
+    attributes exhausted by the rule, ties by declaration order.
+
+    A leaf records its class masses as collected — row counts, or
+    fractional masses under ``nulls='fractional'`` — and its ``n`` is
+    their sum."""
     next_frontier: list[Rule] = []
     splits: list[tuple[int, list[tuple[Condition, int]]]] = []
     attr_rank = {a: i for i, a in enumerate(attr_order)}
@@ -974,7 +993,8 @@ def _decide_level(
             )
             model.rules.append(Rule(rule.conditions, label, 0, rule.depth))
             continue
-        total = sum(h.values())
+        leaf_hist = tuple(sorted(h.items()))
+        total = sum(v for _, v in leaf_hist)
         choice: tuple | None = None
         if best is not None:
             choice = best.get(i)
@@ -1008,7 +1028,7 @@ def _decide_level(
                     _majority(h, label_domain),
                     total,
                     rule.depth,
-                    hist=tuple(sorted((k, int(v)) for k, v in h.items())),
+                    hist=leaf_hist,
                 )
             )
             continue
@@ -1027,7 +1047,9 @@ def _decide_level(
 
 
 def _apply_splits(
-    level: DataFrame, splits: list[tuple[int, list]]
+    level: DataFrame,
+    splits: list[tuple[int, list]],
+    masses: dict[tuple[int, str], dict] | None = None,
 ) -> DataFrame:
     """rid update: only this level's split conditions enter the plan.
 
@@ -1051,7 +1073,14 @@ def _apply_splits(
     rids, under ANSI ``element_at`` would raise) and the arrays hold NULL
     for a leaf rid below it; a categorical value outside the domain
     yields NULL as well — such rows drop out by the isNotNull filter, as
-    rows no child condition matched always have."""
+    rows no child condition matched always have.
+
+    ``masses`` (Quinlan-fractional: the chosen splits' branch masses)
+    adds one more lookup array: per parent, the ``(child id,
+    multiplier)`` pairs of :func:`fractional._fan_out`. A row whose split
+    attribute is NULL explodes over its parent's entry, its weight
+    multiplied; every other row keeps its rid update and its weight.
+    Without masses for this level the SQL text is the unweighted one."""
     n_rid = max(parent for parent, _ in splits) + 1
     first: list[int | None] = [None] * n_rid
     code: list[int | None] = [None] * n_rid
@@ -1093,6 +1122,35 @@ def _apply_splits(
     rid_expr = (
         f"CAST(try_element_at({_sql_array(first)}, {idx}) + {offset} AS INT)"
     )
+    fan: list[str] = ["NULL"] * n_rid
+    for parent, children in splits:
+        m = (masses or {}).get((parent, children[0][0].attr))
+        routes = FR._fan_out(children, m) if m else []
+        if routes:
+            fan[parent] = "array(" + ", ".join(
+                f"named_struct('cid', {cid}, 'mul', {mul:.12f}BD)"
+                for cid, mul in routes
+            ) + ")"
+    if fan.count("NULL") < n_rid:
+        route_t = f"array<struct<cid:int,mul:{FR.MUL_TYPE}>>"
+        fans = f"CAST(array({', '.join(fan)}) AS array<{route_t}>)"
+        unknown = " ".join(
+            f"WHEN {k} THEN {_sql_ident(a)} IS NULL" for a, k in codes.items()
+        )
+        rid_expr = (
+            f"inline(CASE WHEN (CASE {code_at} {unknown} END)"
+            f" THEN try_element_at({fans}, {idx})"
+            f" ELSE CAST(array(named_struct('cid', {rid_expr}, 'mul', 1BD))"
+            f" AS {route_t}) END) AS ({S.RID}, __mul)"
+        )
+        w = _sql_ident(FR.W)
+        rest = [_sql_ident(c) for c in level.columns if c not in (S.RID, FR.W)]
+        level = level.selectExpr(*rest, rid_expr, w).selectExpr(
+            *rest,
+            _sql_ident(S.RID),
+            f"CAST({w} * __mul AS {FR.W_TYPE}) AS {w}",
+        )
+        return level.where(F.col(S.RID).isNotNull())
     return level.withColumn(S.RID, F.expr(rid_expr)).where(
         F.col(S.RID).isNotNull()
     )
@@ -1126,26 +1184,37 @@ def _driver_level_stats(
     num_names: list[str],
     label_domain: list[str],
     min_ratio: float,
-) -> tuple[dict[int, dict[str, int]], dict[int, list]]:
+) -> tuple[dict[int, dict], dict[int, list], dict[tuple[int, str], dict]]:
     """Gain ratios + numeric best-splits computed driver-side from one
     level's collected contingency (``(rid, aid, value_s, value_d, class,
     cnt)`` rows, bounded — see ``_DRIVER_STATS_MAX_ROWS``).
 
     Numerically mirrors the distributed builders in
     :mod:`c45_stats` formula-for-formula (categorical_stats /
-    numeric_best_split / node_info); ``test_tree_golden`` and the
-    forced-distributed equivalence test pin the two paths to the same
-    model. Returns the same ``(hist, stats)`` shapes
-    :func:`_decide_level` consumes from the collected distributed rows.
+    numeric_best_split / node_info / attribute_info);
+    ``test_tree_golden`` and the forced-distributed equivalence tests
+    pin the two paths to the same model. Returns the same ``(hist,
+    stats)`` shapes :func:`_decide_level` consumes from the collected
+    distributed rows, plus ``masses``: the branch masses
+    (``by_value``, or the best boundary's ``n_le``; ``n_known``) of
+    every (node, attribute) holding NULL values, for the rid update.
+
+    Rows with a NULL value (a weighted contingency's) are their (node,
+    attribute)'s unknown mass ``u``: Info is taken over the known rows,
+    the gain ratio is scaled by the known fraction ``n / (n + u)``, and
+    ``u`` is one more split-info branch. At ``u = 0`` each term is
+    exactly neutral — the known rows' Info is the node's, the fraction
+    is 1.0, ``xlog2x(0)`` is 0 — so the numbers are the unweighted
+    ones bit for bit.
     """
     classes = list(label_domain)
     cidx = {c: i for i, c in enumerate(classes)}
     k = len(classes)
 
-    hist: dict[int, dict[str, int]] = {}
+    hist: dict[int, dict] = {}
     cc = pdf[pdf[S.AID] == S.CC_AID]
-    for rid, cls, cnt in zip(cc[S.RID], cc[S.CLASS], cc[S.CNT]):
-        hist.setdefault(int(rid), {})[cls] = int(cnt)
+    for rid, cls, cnt in zip(cc[S.RID], cc[S.CLASS], cc[S.CNT].tolist()):
+        hist.setdefault(int(rid), {})[cls] = cnt
 
     node_info: dict[int, float] = {}
     for rid, h in hist.items():
@@ -1153,16 +1222,30 @@ def _driver_level_stats(
         node_info[rid] = _entropy_np(counts.sum(), _xlog2x_np(counts).sum())
 
     stats: dict[int, list] = {}
+    masses: dict[tuple[int, str], dict] = {}
 
     def emit(rid: int, aid: str, gr: float, boundary) -> None:
         stats.setdefault(rid, []).append(
             {S.AID: aid, "gain_ratio": gr, "boundary": boundary}
         )
 
+    def known(sub, col: str, classes=None):
+        """``sub``'s known-value rows, and per (rid, aid) holding NULL
+        values their unknown mass (of ``classes`` only, when given)."""
+        null = sub[col].isna()
+        if not null.any():
+            return sub, {}
+        w = sub[S.CNT][null]
+        if classes is not None:
+            w = w.where(sub[S.CLASS][null].isin(classes), 0.0)
+        u = w.groupby([sub[S.RID][null], sub[S.AID][null]]).sum()
+        return sub[~null], {(int(r), a): float(x) for (r, a), x in u.items()}
+
     if cat_names:
-        sub = pdf[pdf[S.AID].isin(cat_names)]
+        sub, unknown = known(pdf[pdf[S.AID].isin(cat_names)], "value_s")
         for (rid, aid), g in sub.groupby([S.RID, S.AID], sort=False):
             rid = int(rid)
+            u = unknown.get((rid, aid), 0.0)
             vals, inv = np.unique(g["value_s"].to_numpy(), return_inverse=True)
             # the distributed categorical path aggregates over every
             # class PRESENT (no pivot over label_domain) — mirror by
@@ -1180,20 +1263,28 @@ def _driver_level_stats(
                 )
             n_attr = nv.sum()
             entr = float((nv * ent_v).sum() / n_attr)
-            split_info = _entropy_np(n_attr, _xlog2x_np(nv).sum())
-            emit(
-                rid,
-                aid,
-                _gain_ratio_py(node_info[rid], entr, split_info),
-                None,
+            split_info = _entropy_np(
+                n_attr + u, _xlog2x_np(nv).sum() + _xlog2x_unknown(u)
             )
+            info = node_info[rid]
+            if (rid, aid) in unknown:
+                info = _entropy_np(n_attr, _xlog2x_np(mat.sum(axis=0)).sum())
+                masses[(rid, aid)] = {
+                    "by_value": dict(zip(vals.tolist(), nv.tolist())),
+                    "n_known": float(n_attr),
+                }
+            gr = _gain_ratio_py(info, entr, split_info)
+            emit(rid, aid, gr * (n_attr / (n_attr + u)), None)
 
     if num_names:
         # the distributed numeric path pivots on label_domain, silently
-        # dropping out-of-domain classes — mirror with the same filter
-        sub = pdf[pdf[S.AID].isin(num_names) & pdf[S.CLASS].isin(cidx)]
+        # dropping out-of-domain classes — mirror with the same filter;
+        # their NULL-value rows still need routing masses
+        sub, unknown = known(pdf[pdf[S.AID].isin(num_names)], "value_d", cidx)
+        sub = sub[sub[S.CLASS].isin(cidx)]
         for (rid, aid), g in sub.groupby([S.RID, S.AID], sort=False):
             rid = int(rid)
+            u = unknown.get((rid, aid), 0.0)
             vals, inv = np.unique(g["value_d"].to_numpy(), return_inverse=True)
             mat = np.zeros((len(vals), k), dtype=np.float64)
             ci = np.fromiter(
@@ -1230,32 +1321,44 @@ def _driver_level_stats(
                     0.0,
                 )
             entr = (n_le * ent_le + n_gt * ent_gt) / n
-            split_info = _entropy_np_vec(n, n_le, n_gt)
+            split_info = _entropy_np_vec(n, n_le, n_gt, u)
             # argmin (entr, value) — values ascend, so the first index of
             # the minimal entr is the smallest boundary (struct-min twin)
             ci_mask = np.flatnonzero(mask)
             best_local = ci_mask[np.argmin(entr[ci_mask])]
-            emit(
-                rid,
-                aid,
-                _gain_ratio_py(
-                    node_info[rid],
-                    float(entr[best_local]),
-                    float(split_info[best_local]),
-                ),
-                float(vals[best_local]),
+            info = node_info[rid]
+            if (rid, aid) in unknown:
+                info = _entropy_np(n, _xlog2x_np(tot).sum())
+                masses[(rid, aid)] = {
+                    "n_le": float(n_le[best_local]),
+                    "n_known": n,
+                }
+            gr = _gain_ratio_py(
+                info,
+                float(entr[best_local]),
+                float(split_info[best_local]),
             )
+            emit(rid, aid, gr * (n / (n + u)), float(vals[best_local]))
 
-    return hist, stats
+    return hist, stats, masses
+
+
+def _xlog2x_unknown(u: float) -> float:
+    """``u*log2(u)`` of the unknown split-info branch; 0 when empty."""
+    return float(u * np.log2(u)) if u > 0 else 0.0
 
 
 def _entropy_np_vec(
-    n: float, n_le: np.ndarray, n_gt: np.ndarray
+    n: float, n_le: np.ndarray, n_gt: np.ndarray, unknown: float = 0.0
 ) -> np.ndarray:
-    """Vectorized two-way split information for a fixed total ``n``."""
-    if n <= 0:
+    """Vectorized two-way split information for a fixed known total
+    ``n``, plus the ``unknown`` mass's branch."""
+    total = n + unknown
+    if total <= 0:
         return np.zeros_like(n_le)
-    return np.log2(n) - (_xlog2x_np(n_le) + _xlog2x_np(n_gt)) / n
+    return np.log2(total) - (
+        _xlog2x_np(n_le) + _xlog2x_np(n_gt) + _xlog2x_unknown(unknown)
+    ) / total
 
 
 def _grow_levels(
@@ -1275,6 +1378,7 @@ def _grow_levels(
     cache: bool,
     stat_rows_per_node: int = 0,
     driver_stats_max_rows: int = _DRIVER_STATS_MAX_ROWS,
+    weight: str | None = None,
 ) -> None:
     """The level-synchronous growth loop (see :func:`train`): ONE Spark
     action per tree level (the reference's one-MR-job-per-level shape,
@@ -1293,7 +1397,12 @@ def _grow_levels(
     A two-levels-per-action variant (in-plan argmax + child stats in the
     same query) was measured 28.0s vs 21.2s for this formulation at
     sf0.1: the doubled plan's analysis/codegen cost exceeds the
-    scheduling it saves, so per-level it stays."""
+    scheduling it saves, so per-level it stays.
+
+    With a row ``weight`` (``nulls='fractional'`` on data holding NULLs)
+    the contingency sums weights and keeps NULL values as unknown mass;
+    the rid update fans the rows with an unknown split attribute out
+    over the chosen split's branch masses."""
     decide_kw = dict(
         attr_order=attr_order,
         cat_domains=cat_domains,
@@ -1304,10 +1413,20 @@ def _grow_levels(
     while frontier:
         depth = frontier[0].depth  # level-synchronous: all nodes equal
         hist_only = depth >= max_depth
-        if (
+        cont = None
+        if not hist_only:
+            cont = S.mixed_contingency(
+                S.melt_mixed(
+                    level, cat_names, num_names, schema.label, weight=weight
+                ),
+                weight,
+            )
+        masses: dict[tuple[int, str], dict] = {}
+        driver = (
             not hist_only
             and 0 < len(frontier) * stat_rows_per_node <= driver_stats_max_rows
-        ):
+        )
+        if driver:
             # bounded-contingency fast path: the level's plan is just
             # melt → grouped count (the ONE data-sized exchange); the
             # ≤ driver_stats_max_rows contingency comes back via Arrow
@@ -1316,10 +1435,10 @@ def _grow_levels(
             # at local scale the scheduling/codegen of those stages WAS
             # the training time. Falls back to the fully distributed
             # reduction for wide frontiers/schemas.
-            pdf = S.mixed_contingency(
-                S.melt_mixed(level, cat_names, num_names, schema.label)
-            ).toPandas()
-            hist, stats = _driver_level_stats(
+            pdf = cont.toPandas()
+            if weight:
+                pdf[S.CNT] = pdf[S.CNT].astype(np.float64)
+            hist, stats, masses = _driver_level_stats(
                 pdf,
                 cat_names=cat_names,
                 num_names=num_names,
@@ -1327,25 +1446,31 @@ def _grow_levels(
                 min_ratio=min_ratio,
             )
         else:
+            if weight and not hist_only:
+                # read again for the chosen splits' branch masses
+                cont = cont.localCheckpoint(eager=False)
             rels = _level_rels(
                 level,
+                cont,
                 cat_names=cat_names,
                 num_names=num_names,
                 label=schema.label,
                 label_domain=label_domain,
                 min_ratio=min_ratio,
                 hist_only=hist_only,
+                weight=weight,
             )
             out = rels[0]
             for r in rels[1:]:
                 out = out.unionByName(r)
             collected = out.collect()
 
+            mass = float if weight else int
             hist = {}
             stats = {}
             for row in collected:
                 if row["kind"] == "cc":
-                    hist.setdefault(row[S.RID], {})[row[S.AID]] = int(
+                    hist.setdefault(row[S.RID], {})[row[S.AID]] = mass(
                         row["gain_ratio"]
                     )
                 else:
@@ -1356,7 +1481,11 @@ def _grow_levels(
         )
         if not frontier:
             break
-        level = _apply_splits(level, splits)
+        if weight and not driver:
+            # winners only, after the decision: that collect is
+            # frontier-bounded, not contingency-sized
+            masses = FR._collect_split_masses(cont, splits, label_domain)
+        level = _apply_splits(level, splits, masses)
         # per-level: the materialization shrinks the data as leaves
         # resolve and keeps every level's first stage identical for the
         # codegen cache (a flat frontier CASE WHEN overflows JVM 64KB

@@ -1886,17 +1886,19 @@ _register("c45_train_wide", _c45_train_wide_query)  # iterative: rows-only
 
 
 def _c45_train_fractional_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quinlan-fractional missing-value training (r9,
+    """Quinlan-fractional missing-value training (``Tr.train`` with
+    ``nulls='fractional'``, whose level loop carries a row weight once
+    the prologue finds NULL features; semantics in
     `operators/fractional.py`): the lineitem projection with ~5% of
     `l_discount` and `l_linestatus` deterministically nulled (portable
     MD5 of the full feature tuple, so the same rows are nulled in any
-    engine/partitioning), trained under ``nulls='fractional'`` — gain
-    scaled by the known fraction, unknowns an extra split-info branch,
-    null rows routed to every child with branch-mass-proportional
-    weights. Rows-only: the weighted iterative loop is not
-    SQL-expressible; the semantics are pinned by hand-computed goldens
-    and the clean-data-equality test in tests/test_fractional.py.
-    Returns the decision list with its FRACTIONAL leaf masses."""
+    engine/partitioning) — gain scaled by the known fraction, unknowns
+    an extra split-info branch, null rows routed to every child with
+    branch-mass-proportional weights. Rows-only: the weighted iterative
+    loop is not SQL-expressible; the semantics are pinned by
+    hand-computed goldens and the clean-data-equality test in
+    tests/test_fractional.py. Returns the decision list with its
+    FRACTIONAL leaf masses."""
     from c4_5decisiontreebasedonmapreduce_spark.functions.hashing import (
         md5_long,
     )

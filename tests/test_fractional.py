@@ -1,13 +1,14 @@
-"""Quinlan-fractional missing-value training (operators/fractional.py):
-hand-computed goldens for the gain scaling, the unknown split-info
-branch, and the weight-proportional routing; clean-data model equality
-with the standard trainer; determinism under reruns."""
+"""Quinlan-fractional missing-value training (``train(nulls=
+'fractional')``, operators/fractional.py): hand-computed goldens for the
+gain scaling, the unknown split-info branch, and the weight-proportional
+routing; clean-data model equality with the standard trainer;
+determinism under reruns; fractional leaf masses in the histograms and
+the parquet model; a fixed gateway budget for the fan-out rid update."""
 
 import pandas as pd
 import pytest
 
 from c4_5decisiontreebasedonmapreduce_spark.operators import c45_stats as S
-from c4_5decisiontreebasedonmapreduce_spark.operators import fractional as FR
 from c4_5decisiontreebasedonmapreduce_spark.operators import tree as Tr
 from c4_5decisiontreebasedonmapreduce_spark.sources.tsv import (
     CATEGORICAL,
@@ -88,10 +89,10 @@ def test_fractional_stats_hand_numbers():
             "value_s": [None, None, "x", "y", None, None],
             "value_d": [None] * 6,
             S.CLASS: ["P", "N", "P", "N", "P", "N"],
-            "wsum": [4.0, 4.0, 1.0, 1.0, 3.0, 3.0],
+            S.CNT: [4.0, 4.0, 1.0, 1.0, 3.0, 3.0],
         }
     )
-    hist, stats, masses = FR._fractional_level_stats(
+    hist, stats, masses = Tr._driver_level_stats(
         pdf,
         cat_names=["a"],
         num_names=[],
@@ -202,6 +203,21 @@ def test_fractional_depth2_resplit_conserves_mass(spark):
     )
 
 
+def test_fractional_routes_out_of_domain_label_unknowns(spark):
+    """The numeric stats count declared classes only, but a row with an
+    undeclared label and a NULL split value still carries mass: both
+    stats paths route it, so leaf mass equals the row count."""
+    rows = [(1.0, "A"), (2.0, "A"), (3.0, "B"), (4.0, "B"),
+            (None, "C"), (None, "C")]
+    df = spark.createDataFrame(rows, "v double, lab string")
+    for bound in (Tr._DRIVER_STATS_MAX_ROWS, 0):
+        m = Tr.train(
+            df, SCHEMA_V, max_depth=1, min_rows=1, nulls="fractional",
+            driver_stats_max_rows=bound,
+        )
+        assert [float(r.n) for r in m.rules] == [3.0, 3.0], bound
+
+
 def _fr_model_key(m, nd=6):
     import json
 
@@ -278,22 +294,24 @@ def test_fractional_wide_training_switches_paths_and_models_agree(
     )
 
     paths = []
-    orig_driver = FR._fractional_level_stats
-    orig_dist = FR._distributed_fractional_stats
+    orig_driver, orig_rels = Tr._driver_level_stats, Tr._level_rels
 
     def spy_driver(*a, **k):
         paths.append("driver")
         return orig_driver(*a, **k)
 
-    def spy_dist(*a, **k):
-        paths.append("distributed")
-        return orig_dist(*a, **k)
+    def spy_rels(*a, **k):
+        paths.append("hist" if k.get("hist_only") else "distributed")
+        return orig_rels(*a, **k)
 
-    monkeypatch.setattr(FR, "_fractional_level_stats", spy_driver)
-    monkeypatch.setattr(FR, "_distributed_fractional_stats", spy_dist)
+    monkeypatch.setattr(Tr, "_driver_level_stats", spy_driver)
+    monkeypatch.setattr(Tr, "_level_rels", spy_rels)
     default = Tr.train(df, schema, max_depth=2, nulls="fractional")
     monkeypatch.undo()
     assert paths[0] == "driver" and "distributed" in paths, paths
+    # the standard trainer's path order: the depth-capped level is the
+    # melt-free class histogram, not a melt whose stats are discarded
+    assert paths == ["driver", "distributed", "hist"], paths
 
     forced_driver = Tr.train(
         df,
@@ -308,3 +326,115 @@ def test_fractional_wide_training_switches_paths_and_models_agree(
     assert sum(float(r.n) for r in default.rules) == pytest.approx(
         n_rows, rel=1e-9
     )
+
+
+def _hand_golden_model(spark, **kw):
+    rows = [("x", "P")] * 4 + [("y", "N")] * 4 + [(None, "P"), (None, "N")]
+    df = spark.createDataFrame(rows, "a string, lab string")
+    return Tr.train(df, SCHEMA_A, max_depth=3, min_rows=1, **kw)
+
+
+def test_leaf_hist_sums_to_n(spark, sf_small):
+    """A leaf's histogram holds its class masses as collected: under
+    ``nulls='fractional'`` the 5.0 leaves keep their 0.5 shares (4.5 P +
+    0.5 N), under ``nulls='reject'`` the integer counts; Σ hist is n on
+    every leaf either way."""
+    frac = _hand_golden_model(spark, nulls="fractional")
+    assert {r.conditions[0].value: r.hist for r in frac.rules} == {
+        "x": (("N", 0.5), ("P", 4.5)),
+        "y": (("N", 4.5), ("P", 0.5)),
+    }
+    from c4_5decisiontreebasedonmapreduce_spark import registry as RG
+
+    clean = Tr.train(
+        RG.lineitem_training(spark, sf_small),
+        RG.LINEITEM_TRAINING_SCHEMA,
+        max_depth=4,
+        min_rows=50,
+    )
+    for model in (frac, clean):
+        leaves = [r for r in model.rules if r.label is not None]
+        assert leaves
+        for r in leaves:
+            assert sum(v for _, v in r.hist) == r.n, r
+    assert all(
+        isinstance(v, int) for r in clean.rules for _, v in r.hist
+    )
+
+
+def test_parquet_model_round_trips_counts_and_masses(
+    spark, sf_small, tmp_path
+):
+    """``save_parquet``/``load_parquet`` keep integer row counts as
+    integers (the reloaded standard model writes the same model.json
+    text) and fractional masses exactly."""
+    from c4_5decisiontreebasedonmapreduce_spark import registry as RG
+
+    standard = Tr.train(
+        RG.lineitem_training(spark, sf_small),
+        RG.LINEITEM_TRAINING_SCHEMA,
+        max_depth=3,
+        min_rows=50,
+    )
+    standard.save_parquet(spark, str(tmp_path / "standard"))
+    back = Tr.DecisionListModel.load_parquet(spark, str(tmp_path / "standard"))
+    assert back.to_json() == standard.to_json()
+
+    rows = (
+        [("x", 1.0, "P")] * 12
+        + [("x", 4.0, "N")] * 9
+        + [("y", 2.0, "N")] * 20
+        + [(None, 3.0, "P")] * 4
+        + [("x", None, "P")] * 3
+    )
+    schema = TrainingSchema(
+        features=(
+            AttributeSpec("a", CATEGORICAL, ("x", "y")),
+            AttributeSpec("v", NUMERIC),
+        ),
+        label="lab",
+        label_domain=("N", "P"),
+    )
+    df = spark.createDataFrame(rows, "a string, v double, lab string")
+    frac = Tr.train(df, schema, max_depth=3, min_rows=1, nulls="fractional")
+    assert any(r.n != int(r.n) for r in frac.rules)
+    frac.save_parquet(spark, str(tmp_path / "fractional"))
+    back = Tr.DecisionListModel.load_parquet(
+        spark, str(tmp_path / "fractional")
+    )
+    assert back.rules == frac.rules
+    assert [float(r.n) for r in back.rules] == [float(r.n) for r in frac.rules]
+
+
+def test_fractional_rid_update_gateway_calls_fixed(spark, py4j_calls):
+    """The fan-out rid update is data, not code: one parent whose split
+    attribute is NULL on some rows costs the same py4j round trips with
+    4 children as with 64 (a per-child ``F.when`` router paid several
+    per condition)."""
+    from pyspark.sql import functions as F
+
+    from c4_5decisiontreebasedonmapreduce_spark.operators import (
+        fractional as FR,
+    )
+
+    def update(n_children):
+        domain = [f"v{i}" for i in range(n_children)]
+        level = spark.createDataFrame(
+            [("v0", "P", 0, 1), (None, "N", 0, 1)],
+            f"x string, lab string, {S.RID} int, {FR.W} int",
+        ).withColumn(FR.W, F.col(FR.W).cast(FR.W_TYPE))
+        children = [
+            (Tr.Condition("x", Tr.OP_EQ, v), i) for i, v in enumerate(domain)
+        ]
+        masses = {
+            (0, "x"): {
+                "by_value": {v: 1.0 for v in domain},
+                "n_known": float(n_children),
+            }
+        }
+        return lambda: Tr._apply_splits(level, [(0, children)], masses)
+
+    assert py4j_calls(update(4)) == py4j_calls(update(64))
+    out = update(64)().collect()
+    assert len(out) == 65  # the known row, and the NULL row 64 times
+    assert sum(r[FR.W] for r in out) == 2

@@ -965,7 +965,7 @@ def test_train_prologue_is_one_scan(spark, sf_small):
     sc = spark.sparkContext
     sc.setJobGroup("prologue-probe", "one-scan pin")
     try:
-        _, edges = Tr._prologue_scan(
+        _, edges, _ = Tr._prologue_scan(
             base,
             nulls="reject",
             cat_names=[a.name for a in schema.categorical],

@@ -181,7 +181,7 @@ def test_prologue_edges_match_lit_list_percentiles(spark):
     base = spark.createDataFrame(rows, schema)
     num = ["d", "i", "m"]
     for max_bins in (16, 256):
-        _, edges = Tr._prologue_scan(
+        _, edges, _ = Tr._prologue_scan(
             base, nulls="reject", cat_names=[], num_names=num, label="y",
             cat_domains={}, max_bins=max_bins,
         )

@@ -492,6 +492,40 @@ def _trie_sql(
     return f"CASE {whens} ELSE {_sql_lit(default)} END"
 
 
+#: distinct values :func:`_bucket_sql` can return: 256 per octave for
+#: each sign over the 2046 normal and 52 subnormal octaves, plus 0, ±inf
+#: and NaN
+_KEYS_PER_COLUMN = 2 * (2046 + 52) * 256 + 4
+
+
+def _bucket_sql(x: str) -> str:
+    """SQL text of the split-candidate bucket of the DOUBLE expression
+    ``x``: ``x`` rounded to 9 significant bits (256 buckets per octave).
+
+    The rounding is Veltkamp's split, ``g - (g - x)`` with
+    ``g = x·(2⁴⁴ + 1)``: multiplications and subtractions only, with no
+    libm call, so any IEEE-754 binary64 arithmetic (the JVM's, NumPy's)
+    computes the same key bit for bit. The key never decreases as ``x``
+    grows, and lies within 2⁻⁹ of ``x`` relatively. Magnitudes where
+    ``g`` would overflow (≥ 2⁹⁶⁰) or the split underflow (< 2⁻⁹⁶⁰) are
+    scaled by an exact power of two first; ±inf and NaN are their own
+    keys."""
+
+    def split(y: str) -> str:
+        g = f"({y}) * {_sql_lit(2.0**44 + 1)}"
+        return f"({g} - ({g} - ({y})))"
+
+    up, down = _sql_lit(2.0**100), _sql_lit(2.0**-100)
+    return (
+        f"CASE WHEN abs({x}) < {_sql_lit(2.0**-960)}"
+        f" THEN {split(f'{x} * {up}')} * {down}"
+        f" WHEN abs({x}) < {_sql_lit(2.0**960)} THEN {split(x)}"
+        f" WHEN abs({x}) < {_sql_lit(math.inf)}"
+        f" THEN {split(f'{x} * {down}')} * {up}"
+        f" ELSE {x} END"
+    )
+
+
 def _prologue_scan(
     base: DataFrame,
     *,
@@ -503,11 +537,10 @@ def _prologue_scan(
     max_bins: int,
     apply_to=None,
 ) -> tuple[DataFrame, dict[str, list[float]], dict[str, int]]:
-    """ONE multi-aggregate job over the training projection computing
+    """ONE grouped aggregate over the training projection computing
     everything ``train()`` needs before level 0: per-column null counts
-    (the missing-value audit), and per-numeric-attribute quantile split
-    candidates (GK sketches via ``percentile_approx``, whose 0.5 entry
-    doubles as the imputation median under ``nulls='missing'``).
+    (the missing-value audit), and per-numeric-attribute split
+    candidates.
 
     Returns ``(base', edges, dirty)`` where ``base'`` has the null
     policy applied (untouched when clean — bit-identical plan),
@@ -515,58 +548,96 @@ def _prologue_scan(
     boundaries, and ``dirty`` maps each feature holding NULLs to its
     null count.
 
+    The candidates are a pure function of each column's multiset of
+    non-null values, so partitioning, row order and uniform K×
+    duplication leave them — and the model — unchanged (the reference's
+    candidates, every distinct value, have the same property,
+    `MyReducer.java:140-144`). The aggregate ``stack``s the columns and
+    groups by (column, :func:`_bucket_sql` key) — a fixed bucket per
+    value, 256 per octave — computing the bucket's non-null count and
+    ``max``. On the driver, probability ``i/max_bins`` (i = 0..max_bins)
+    picks the max of the first bucket, in key order, whose cumulative
+    count reaches it, compared exactly in integers
+    (``cum·max_bins ≥ i·total``). Each edge is therefore an actual data
+    value, which ``_snap_numeric``'s exactness argument needs; candidate
+    edges only need to be representative, since the stats computed AT
+    them stay exact. Under ``nulls='missing'`` numeric NULLs are imputed
+    with the p = ½ pick, itself a data value that snapping maps to an
+    exact candidate. The buckets' resolution is relative (2⁻⁹ of the
+    value): a column whose values crowd into a narrow band far from
+    zero — epoch timestamps, say — gets few candidates.
+
+    The collected histogram holds one row per categorical or label
+    column that holds NULLs and, per numeric column, one row per
+    occupied bucket plus one NULL row: at most ``_KEYS_PER_COLUMN`` + 1,
+    whatever the row count (256 rows per octave the column's values
+    span, in practice). The bound is checked on the collected result.
+
     At 100 TB this is THE scan that matters: the previous design paid
     three full corpus passes before level 0 (null audit, row count,
-    quantile sample/GK) — folding them into one aggregate trades a
-    little per-row sketch CPU for two entire passes of I/O. Candidate
-    edges only need to be representative (the stats computed AT the
-    surviving candidates stay exact, see ``_snap_numeric``); sketch
-    accuracy 1e4 is tighter than the old ``1/(4*max_bins)`` bound.
-    Quantiles are computed over non-null values, so under
-    ``nulls='missing'`` the imputed median is itself a data value that
-    snapping maps to an exact candidate — no second pass needed.
+    quantile sample) — one aggregate trades a little per-row CPU for
+    two entire passes of I/O.
 
     ``apply_to`` (optional zero-arg callable) supplies a DIFFERENT
     relation for the null-policy transforms to apply to — the caller's
     concurrently-materialized checkpoint of the same rows. It is
     resolved only AFTER the aggregate has run, so the caller's
-    materialization job and this scan overlap. The aggregate itself
-    always runs on ``base``: percentile_approx's GK sketch merge is
-    partition-layout-dependent, and the model's split candidates (and
-    the golden-oracle pins derived from them) are tied to the raw
-    scan's layout."""
+    materialization job and this scan overlap."""
     if nulls not in ("reject", "missing", "fractional"):
         raise ValueError(
             "nulls must be 'reject', 'missing' or 'fractional', "
             f"got {nulls!r}"
         )
-    cols = cat_names + num_names + [label]
-    probs = sorted({i / max_bins for i in range(max_bins + 1)} | {0.5})
-    med_idx = probs.index(0.5)
-    # the probabilities array is rendered once and shared by every
-    # numeric attribute: one F.expr per column instead of max_bins+1
-    # F.lit round trips per column
-    probs_sql = _sql_array(probs)
-    aggs = [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{i}")
-        for i, c in enumerate(cols)
-    ] + [
-        F.expr(
-            f"percentile_approx({_sql_ident(c)}, {probs_sql}, 10000)"
-            f" AS __edges_{i}"
+    cols = num_names + cat_names + [label]
+    n_num = len(num_names)
+    null_d = "CAST(NULL AS DOUBLE)"
+    entries = []
+    for i, c in enumerate(cols):
+        if i < n_num:
+            x = f"CAST({_sql_ident(c)} AS DOUBLE)"
+            entries.append(f"{i}, {_bucket_sql(x)}, {x}")
+        else:
+            # null counts only: the non-null rows are filtered out below
+            entries.append(
+                f"{i}, if({_sql_ident(c)} IS NULL, {null_d}, 0D), {null_d}"
+            )
+    buckets = (
+        base.selectExpr(
+            f"stack({len(cols)}, {', '.join(entries)}) AS (a, k, v)"
         )
-        for i, c in enumerate(num_names)
-    ]
-    row = base.agg(*aggs).first()
+        .where(f"a < {n_num} OR k IS NULL")
+        .groupBy("a", "k")
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count("v").alias("n"),
+            F.max("v").alias("top"),
+        )
+        .toPandas()
+    )
     if apply_to is not None:
         base = apply_to()
-    counts = {
-        c: int(row[f"__nulls_{i}"] or 0) for i, c in enumerate(cols)
-    }
-    quants = {c: row[f"__edges_{i}"] for i, c in enumerate(num_names)}
-    edges = {
-        c: sorted({float(e) for e in (q or [])}) for c, q in quants.items()
-    }
+    nulls_by = (buckets["rows"] - buckets["n"]).groupby(buckets["a"]).sum()
+    counts = {c: int(nulls_by.get(i, 0)) for i, c in enumerate(cols)}
+    edges = {c: [] for c in num_names}
+    medians: dict[str, float] = {}
+    for i, g in buckets[buckets["n"] > 0].groupby("a"):
+        c = num_names[i]
+        if len(g) > _KEYS_PER_COLUMN:
+            raise RuntimeError(
+                f"split-candidate histogram of {c!r} has {len(g)} buckets;"
+                f" the bucket key admits at most {_KEYS_PER_COLUMN}"
+            )
+        g = g.sort_values("k", na_position="last")
+        cum = g["n"].to_numpy().cumsum()
+        total = int(cum[-1])
+        # keys rise with the value, so the bucket maxima rise strictly;
+        # + 0.0 turns a -0.0 max into 0.0 (max does not order the two)
+        top = g["top"].to_numpy() + 0.0
+        # the first bucket with cum ≥ ⌈p·total⌉, for p = j/max_bins and ½
+        ranks = [-(-j * total // max_bins) for j in range(max_bins + 1)]
+        at = np.searchsorted(cum, ranks + [-(-total // 2)])
+        edges[c] = [float(top[j]) for j in np.unique(at[:-1])]
+        medians[c] = float(top[at[-1]])
     if counts[label] > 0:
         raise ValueError(
             f"{counts[label]} rows have a NULL label ({label}); "
@@ -590,15 +661,13 @@ def _prologue_scan(
         for c in cat_dirty:
             cat_domains[c].append(MISSING_CATEGORY)
     if num_dirty:
-        empty = [c for c in num_dirty if quants[c] is None]
+        empty = [c for c in num_dirty if c not in medians]
         if empty:
             raise ValueError(
                 f"numeric feature(s) entirely NULL: {', '.join(empty)}; "
                 "no median exists to impute — drop the column instead"
             )
-        base = base.fillna(
-            {c: float(quants[c][med_idx]) for c in num_dirty}
-        )
+        base = base.fillna({c: medians[c] for c in num_dirty})
     return base, edges, dirty
 
 
@@ -648,8 +717,9 @@ def _snap_numeric(
             exprs.append(col)
             continue
         above = f"filter({_sql_array(edges)}, {lv} -> {lv} >= {col})"
-        # values above the top edge (possible only through quantile error)
-        # keep their own value so ordering semantics never break
+        # values above the top edge (none for the prologue's edges, whose
+        # top is the column max) keep their own value so ordering
+        # semantics never break
         exprs.append(
             f"CAST(coalesce(array_min({above}), {col}) AS {dtypes[c]})"
             f" AS {col}"
@@ -695,8 +765,10 @@ def train(
     null counts from one cheap audit aggregate; ``"missing"`` makes
     categorical nulls their own ``__missing__`` branch (appended to the
     declared domain, so the tree can SPLIT on missingness — it is often
-    informative) and median-imputes numeric nulls (a null carries no
-    ordering information for a threshold split); ``"fractional"`` runs
+    informative) and imputes numeric nulls with the prologue's p = ½
+    pick — the largest value in the 256-per-octave bucket that holds
+    the median rank (a null carries no ordering information for a
+    threshold split); ``"fractional"`` runs
     the actual Quinlan C4.5 semantics (operators/fractional.py):
     known-fraction gain scaling, an unknown pseudo-branch in the split
     information, and rows with an unknown split attribute routed to
@@ -738,11 +810,12 @@ def train(
 
     spark = df.sparkSession
     base = df.select(*attr_order, schema.label)
-    # ONE prologue scan: null audit + quantile candidates in a single
-    # multi-aggregate job. The aggregate runs on the raw scan
-    # (pre-repartition: the quantile sketches are layout-dependent and
-    # it must not drag a shuffle through re-execution) — but with
-    # cache=True it OVERLAPS the spread checkpoint's materialization:
+    # ONE prologue scan: null audit + split candidates in a single
+    # grouped aggregate. The candidates depend on the rows alone, not on
+    # their layout, so the aggregate may run on the raw scan
+    # (pre-repartition: it must not drag a shuffle through
+    # re-execution) — and with cache=True it OVERLAPS the spread
+    # checkpoint's materialization:
     # the two jobs only share the source scan, and serially they cost
     # ~1.1 s + ~1.3 s at sf0.1 while overlapped they cost the max.
     # The null-policy transforms and the snap then stack on the

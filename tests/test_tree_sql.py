@@ -160,8 +160,14 @@ def test_snap_numeric_renders_literals_exactly(spark):
 
 
 def test_prologue_edges_match_lit_list_percentiles(spark):
-    """The rendered probabilities array asks percentile_approx for the
-    same quantiles as the ``F.lit(list)`` argument it replaced."""
+    """The prologue's split candidates equal an independent NumPy
+    evaluation of its rule over the same rows. A value's bucket is the
+    value rounded half-to-even to 9 significant bits (here through
+    ``frexp``/``ldexp``; the engine uses Veltkamp's split), and
+    probability ``j/max_bins`` picks the largest value of the first
+    bucket, in value order, whose cumulative count reaches it. (The
+    name is from when this pinned ``percentile_approx`` called through
+    ``F.lit(list)``.)"""
     rng = np.random.default_rng(7)
     rows = [
         (
@@ -185,12 +191,39 @@ def test_prologue_edges_match_lit_list_percentiles(spark):
             base, nulls="reject", cat_names=[], num_names=num, label="y",
             cat_domains={}, max_bins=max_bins,
         )
-        probs = sorted({i / max_bins for i in range(max_bins + 1)} | {0.5})
-        old = base.agg(
-            *[F.percentile_approx(c, F.lit(probs), F.lit(10_000)).alias(c)
-              for c in num]
-        ).first()
-        assert edges == {c: sorted({float(e) for e in old[c]}) for c in num}
+        want = {}
+        for j, c in enumerate(num):
+            x = np.sort(np.array([float(r[j]) for r in rows]))
+            m, e = np.frexp(x)
+            key = np.ldexp(np.round(m * 512) / 512, e)
+            last = np.flatnonzero(np.r_[key[1:] != key[:-1], True])
+            picks = {
+                int(np.searchsorted(last + 1, -(-k * len(x) // max_bins)))
+                for k in range(max_bins + 1)
+            }
+            want[c] = [float(x[last[b]]) for b in sorted(picks)]
+        assert edges == want
+        assert all(len(v) <= max_bins + 1 for v in edges.values())
+
+
+def test_model_json_is_layout_invariant(spark, sf_small):
+    """The same rows train the byte-identical model whatever their
+    partitioning or order: the split candidates are a function of each
+    column's values alone."""
+    df = lineitem_training(spark, sf_small)
+
+    def model_json(layout):
+        return Tr.train(
+            layout, LINEITEM_TRAINING_SCHEMA, max_depth=4, min_rows=10
+        ).to_json()
+
+    want = model_json(df.coalesce(1))
+    for layout in (
+        df.repartition(3),
+        df.repartition(7),
+        df.orderBy(F.rand(11)).repartition(5),
+    ):
+        assert model_json(layout) == want
 
 
 def _full_tree(depth: int) -> Tr.DecisionListModel:

@@ -492,27 +492,26 @@ def _trie_sql(
     return f"CASE {whens} ELSE {_sql_lit(default)} END"
 
 
-#: distinct values :func:`_bucket_sql` can return: 256 per octave for
-#: each sign over the 2046 normal and 52 subnormal octaves, plus 0, ±inf
-#: and NaN
-_KEYS_PER_COLUMN = 2 * (2046 + 52) * 256 + 4
+#: most rows one prologue histogram may bring to the driver (see
+#: :func:`_prologue_scan`)
+_PROLOGUE_MAX_ROWS = 1 << 20
 
 
-def _bucket_sql(x: str) -> str:
-    """SQL text of the split-candidate bucket of the DOUBLE expression
-    ``x``: ``x`` rounded to 9 significant bits (256 buckets per octave).
+def _bucket_sql(x: str, bits: int = 9) -> str:
+    """SQL text of the DOUBLE expression ``x`` rounded to ``bits``
+    significant bits (9 ≤ bits ≤ 51): 2^(bits-1) buckets per octave.
 
     The rounding is Veltkamp's split, ``g - (g - x)`` with
-    ``g = x·(2⁴⁴ + 1)``: multiplications and subtractions only, with no
-    libm call, so any IEEE-754 binary64 arithmetic (the JVM's, NumPy's)
-    computes the same key bit for bit. The key never decreases as ``x``
-    grows, and lies within 2⁻⁹ of ``x`` relatively. Magnitudes where
+    ``g = x·(2^(53-bits) + 1)``: multiplications and subtractions only,
+    with no libm call, so it is the same in any IEEE-754 binary64
+    arithmetic. It rounds to nearest, so the key never decreases as
+    ``x`` grows and a bucket is an interval of values. Magnitudes where
     ``g`` would overflow (≥ 2⁹⁶⁰) or the split underflow (< 2⁻⁹⁶⁰) are
     scaled by an exact power of two first; ±inf and NaN are their own
     keys."""
 
     def split(y: str) -> str:
-        g = f"({y}) * {_sql_lit(2.0**44 + 1)}"
+        g = f"({y}) * {_sql_lit(2.0 ** (53 - bits) + 1)}"
         return f"({g} - ({g} - ({y})))"
 
     up, down = _sql_lit(2.0**100), _sql_lit(2.0**-100)
@@ -536,6 +535,7 @@ def _prologue_scan(
     cat_domains: dict[str, list[str]],
     max_bins: int,
     apply_to=None,
+    max_rows: int = _PROLOGUE_MAX_ROWS,
 ) -> tuple[DataFrame, dict[str, list[float]], dict[str, int]]:
     """ONE grouped aggregate over the training projection computing
     everything ``train()`` needs before level 0: per-column null counts
@@ -548,30 +548,33 @@ def _prologue_scan(
     boundaries, and ``dirty`` maps each feature holding NULLs to its
     null count.
 
-    The candidates are a pure function of each column's multiset of
-    non-null values, so partitioning, row order and uniform K×
-    duplication leave them — and the model — unchanged (the reference's
-    candidates, every distinct value, have the same property,
-    `MyReducer.java:140-144`). The aggregate ``stack``s the columns and
-    groups by (column, :func:`_bucket_sql` key) — a fixed bucket per
-    value, 256 per octave — computing the bucket's non-null count and
-    ``max``. On the driver, probability ``i/max_bins`` (i = 0..max_bins)
-    picks the max of the first bucket, in key order, whose cumulative
-    count reaches it, compared exactly in integers
-    (``cum·max_bins ≥ i·total``). Each edge is therefore an actual data
-    value, which ``_snap_numeric``'s exactness argument needs; candidate
-    edges only need to be representative, since the stats computed AT
-    them stay exact. Under ``nulls='missing'`` numeric NULLs are imputed
-    with the p = ½ pick, itself a data value that snapping maps to an
-    exact candidate. The buckets' resolution is relative (2⁻⁹ of the
-    value): a column whose values crowd into a narrow band far from
-    zero — epoch timestamps, say — gets few candidates.
+    The candidates are exact quantiles: of a column's n non-null
+    values, edge j (j = 0..max_bins) is the ⌈j·n/max_bins⌉-th smallest
+    (the smallest for j = 0), duplicates collapsed. They are a pure
+    function of the column's multiset of values, so partitioning, row
+    order and uniform K× duplication leave them — and the model —
+    unchanged (the reference's candidates, every distinct value, have
+    the same property, `MyReducer.java:140-144`). Each edge is an actual
+    data value, which ``_snap_numeric``'s exactness argument needs.
+    Under ``nulls='missing'`` numeric NULLs are imputed with the median,
+    the ⌈n/2⌉-th smallest value.
 
-    The collected histogram holds one row per categorical or label
-    column that holds NULLs and, per numeric column, one row per
-    occupied bucket plus one NULL row: at most ``_KEYS_PER_COLUMN`` + 1,
-    whatever the row count (256 rows per octave the column's values
-    span, in practice). The bound is checked on the collected result.
+    The order statistics are read off histograms: grouped aggregates
+    over the ``stack``ed columns keyed by (column, key), computing
+    count(*), count(v), min(v) and max(v), whose ranks the driver
+    compares in exact integers. No histogram brings more than
+    ``max_rows`` rows to the driver, whatever the row count: each is
+    collected through ``limit(max_rows + 1)`` and its size checked. The
+    first keys each value by itself; when the columns hold ≤
+    ``max_rows`` distinct values between them, it and the null counts
+    are the whole prologue. Otherwise a second keys each value by its
+    9-bit rounding (:func:`_bucket_sql`, 256 buckets per octave). An
+    order statistic whose bucket holds a single value is then known;
+    the others are refined by aggregates over just the rows of their
+    buckets, each at a rounding fine enough to make progress and coarse
+    enough to fit ``max_rows``, until every bucket holding one is a
+    single value. These passes read ``apply_to``'s relation when there
+    is one.
 
     At 100 TB this is THE scan that matters: the previous design paid
     three full corpus passes before level 0 (null audit, row count,
@@ -581,63 +584,142 @@ def _prologue_scan(
     ``apply_to`` (optional zero-arg callable) supplies a DIFFERENT
     relation for the null-policy transforms to apply to — the caller's
     concurrently-materialized checkpoint of the same rows. It is
-    resolved only AFTER the aggregate has run, so the caller's
+    resolved only AFTER the first aggregate has run, so the caller's
     materialization job and this scan overlap."""
     if nulls not in ("reject", "missing", "fractional"):
         raise ValueError(
             "nulls must be 'reject', 'missing' or 'fractional', "
             f"got {nulls!r}"
         )
+    if max_rows < 8:
+        raise ValueError(f"max_rows must be at least 8, got {max_rows}")
     cols = num_names + cat_names + [label]
     n_num = len(num_names)
+    xs = [f"CAST({_sql_ident(c)} AS DOUBLE)" for c in num_names]
     null_d = "CAST(NULL AS DOUBLE)"
-    entries = []
-    for i, c in enumerate(cols):
-        if i < n_num:
-            x = f"CAST({_sql_ident(c)} AS DOUBLE)"
-            entries.append(f"{i}, {_bucket_sql(x)}, {x}")
-        else:
-            # null counts only: the non-null rows are filtered out below
-            entries.append(
-                f"{i}, if({_sql_ident(c)} IS NULL, {null_d}, 0D), {null_d}"
+    # categorical and label columns contribute their NULL rows only
+    null_entries = [
+        (f"if({_sql_ident(c)} IS NULL, {i}, NULL)", null_d, null_d)
+        for i, c in enumerate(cols[n_num:], n_num)
+    ]
+
+    def histogram(df: DataFrame, entries: list[tuple[str, str, str]]):
+        """(group j, key k, rows, n, lo, hi) per (j, k) of the stacked
+        (j, k, v) entries, or None when it has more than max_rows."""
+        h = (
+            df.selectExpr(
+                f"stack({len(entries)}, {', '.join(map(', '.join, entries))})"
+                " AS (j, k, v)"
             )
-    buckets = (
-        base.selectExpr(
-            f"stack({len(cols)}, {', '.join(entries)}) AS (a, k, v)"
+            .where("j IS NOT NULL")
+            .groupBy("j", "k")
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.count("v").alias("n"),
+                F.min("v").alias("lo"),
+                F.max("v").alias("hi"),
+            )
+            .limit(max_rows + 1)
+            .toPandas()
         )
-        .where(f"a < {n_num} OR k IS NULL")
-        .groupBy("a", "k")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.count("v").alias("n"),
-            F.max("v").alias("top"),
+        return h if len(h) <= max_rows else None
+
+    def too_big(what: str) -> RuntimeError:
+        return RuntimeError(
+            f"split-candidate histogram over {max_rows} rows {what}"
         )
-        .toPandas()
+
+    hist = histogram(
+        base, [(str(i), x, x) for i, x in enumerate(xs)] + null_entries
     )
     if apply_to is not None:
         base = apply_to()
-    nulls_by = (buckets["rows"] - buckets["n"]).groupby(buckets["a"]).sum()
+    bits = 9
+    if hist is None:
+        hist = histogram(
+            base,
+            [(str(i), _bucket_sql(x, bits), x) for i, x in enumerate(xs)]
+            + null_entries,
+        )
+        if hist is None:
+            raise too_big(f"at {2 ** (bits - 1)} buckets per octave")
+    nulls_by = (hist["rows"] - hist["n"]).groupby(hist["j"]).sum()
     counts = {c: int(nulls_by.get(i, 0)) for i, c in enumerate(cols)}
+    hist = hist[hist["n"] > 0]
+    # per numeric column: the ranks of the picks j/max_bins
+    # (j = 0..max_bins) and, last, of the median; vals fills in their
+    # values
+    ranks, vals = {}, {}
+    for i, n in hist.groupby("j")["n"].sum().items():
+        n = int(n)
+        ranks[i] = np.array(
+            [max(1, -(-j * n // max_bins)) for j in range(max_bins + 1)]
+            + [-(-n // 2)]
+        )
+        vals[i] = np.empty(len(ranks[i]))
+
+    def resolve(hist, items: dict, bits: int) -> list[tuple]:
+        """Settle each item's picks from its rows of ``hist``; return the
+        (column, lo, hi, rows below lo, rows, picks, bits) items of the
+        buckets that hold a pick and more than one value."""
+        out = []
+        for j, g in hist.groupby("j"):
+            i, below, idx = items[j]
+            g = g.sort_values("k", na_position="last")
+            cum = g["n"].to_numpy().cumsum()
+            # + 0.0 turns a -0.0 into 0.0 (max does not order the two)
+            lo, hi = g["lo"].to_numpy(), g["hi"].to_numpy() + 0.0
+            at = np.searchsorted(cum, ranks[i][idx] - below)
+            for t in np.unique(at):
+                picks = idx[at == t]
+                if lo[t] < hi[t]:
+                    skip = int(cum[t - 1]) if t else 0
+                    out.append((i, lo[t], hi[t], below + skip,
+                                int(cum[t]) - skip, picks, bits))
+                else:  # one value (a NaN bucket too: NaN < NaN is false)
+                    vals[i][picks] = hi[t]
+        return out
+
+    items = resolve(
+        hist, {i: (i, 0, np.arange(len(r))) for i, r in ranks.items()}, bits
+    )
+    while items:
+        # refine a batch of the coarsest items. A bucket of b bits holds
+        # ≤ 2^(54-b) distinct doubles and meets ≤ 2^(s+1) buckets of
+        # b+s bits, so each item of the batch brings ≤ cap rows
+        items.sort(key=lambda it: it[6])
+        bits = items[0][6]
+        batch = [it for it in items[: max_rows // 8] if it[6] == bits]
+        items = items[len(batch):]
+        cap = max_rows // len(batch)
+        exact = (
+            sum(it[4] for it in batch) <= max_rows or 2 ** (54 - bits) <= cap
+        )
+        if not exact:
+            bits = min(51, bits + int(math.log2(cap)) - 1)
+        entries = []
+        for i, x in enumerate(xs):
+            whens = " ".join(
+                f"WHEN {x} BETWEEN {_sql_lit(lo)} AND {_sql_lit(hi)}"
+                f" THEN {j}"
+                for j, (c, lo, hi, *_) in enumerate(batch)
+                if c == i
+            )
+            if whens:
+                key = x if exact else _bucket_sql(x, bits)
+                entries.append((f"CASE {whens} END", key, x))
+        hist = histogram(base, entries)
+        if hist is None:
+            raise too_big(f"refining {len(batch)} buckets")
+        items += resolve(
+            hist, {j: (it[0], it[3], it[5]) for j, it in enumerate(batch)},
+            bits,
+        )
     edges = {c: [] for c in num_names}
     medians: dict[str, float] = {}
-    for i, g in buckets[buckets["n"] > 0].groupby("a"):
-        c = num_names[i]
-        if len(g) > _KEYS_PER_COLUMN:
-            raise RuntimeError(
-                f"split-candidate histogram of {c!r} has {len(g)} buckets;"
-                f" the bucket key admits at most {_KEYS_PER_COLUMN}"
-            )
-        g = g.sort_values("k", na_position="last")
-        cum = g["n"].to_numpy().cumsum()
-        total = int(cum[-1])
-        # keys rise with the value, so the bucket maxima rise strictly;
-        # + 0.0 turns a -0.0 max into 0.0 (max does not order the two)
-        top = g["top"].to_numpy() + 0.0
-        # the first bucket with cum ≥ ⌈p·total⌉, for p = j/max_bins and ½
-        ranks = [-(-j * total // max_bins) for j in range(max_bins + 1)]
-        at = np.searchsorted(cum, ranks + [-(-total // 2)])
-        edges[c] = [float(top[j]) for j in np.unique(at[:-1])]
-        medians[c] = float(top[at[-1]])
+    for i, v in vals.items():
+        edges[num_names[i]] = np.unique(v[:-1]).tolist()
+        medians[num_names[i]] = float(v[-1])
     if counts[label] > 0:
         raise ValueError(
             f"{counts[label]} rows have a NULL label ({label}); "
@@ -765,10 +847,9 @@ def train(
     null counts from one cheap audit aggregate; ``"missing"`` makes
     categorical nulls their own ``__missing__`` branch (appended to the
     declared domain, so the tree can SPLIT on missingness — it is often
-    informative) and imputes numeric nulls with the prologue's p = ½
-    pick — the largest value in the 256-per-octave bucket that holds
-    the median rank (a null carries no ordering information for a
-    threshold split); ``"fractional"`` runs
+    informative) and imputes numeric nulls with the column's median,
+    its ⌈n/2⌉-th smallest non-null value (a null carries no ordering
+    information for a threshold split); ``"fractional"`` runs
     the actual Quinlan C4.5 semantics (operators/fractional.py):
     known-fraction gain scaling, an unknown pseudo-branch in the split
     information, and rows with an unknown split attribute routed to
@@ -811,8 +892,10 @@ def train(
     spark = df.sparkSession
     base = df.select(*attr_order, schema.label)
     # ONE prologue scan: null audit + split candidates in a single
-    # grouped aggregate. The candidates depend on the rows alone, not on
-    # their layout, so the aggregate may run on the raw scan
+    # grouped aggregate (plus refinement passes over the checkpoint when
+    # the columns hold more distinct values than its collect bound).
+    # The candidates depend on the rows alone, not on their layout, so
+    # the aggregate may run on the raw scan
     # (pre-repartition: it must not drag a shuffle through
     # re-execution) — and with cache=True it OVERLAPS the spread
     # checkpoint's materialization:

@@ -752,8 +752,8 @@ def _c45_train_pruned_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends at the grown tree, `Main.java:123-131`). Pruning is driver-side
     math over the finished rules (zero extra Spark jobs), so this entry
     reuses `c45_train`'s cached model. Oracle: the pruned sf0.01
-    structure is pinned (`_GOLDEN_SF001_PRUNED_PATHS` — one subtree
-    collapses to a depth-3 leaf) and DuckDB independently recomputes
+    structure is pinned (`_GOLDEN_SF001_PRUNED_PATHS` — four subtrees
+    collapse to depth-3 leaves) and DuckDB independently recomputes
     every pruned leaf's `n` and majority label from the raw parquet, so
     a wrong pooled count or collapsed label fails the hash."""
     from c4_5decisiontreebasedonmapreduce_spark.operators.pruning import (
@@ -786,43 +786,48 @@ def _c45_accuracy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 15 internal split decisions do not change with the run, the core
 # count or the partition layout (tests/test_tree_sql.py trains one
 # table at several layouts and compares model.json byte for byte).
-# The candidates equal a NumPy evaluation of the bucket rule over the
-# raw parquet. The oracle pins ONLY this structure; DuckDB independently
+# The candidates equal NumPy's `inverted_cdf` quantiles of the raw
+# parquet's columns. The oracle pins ONLY this structure; DuckDB independently
 # recomputes each leaf's row count `n` and majority `label` (tie-break:
 # cnt DESC, class ASC — same as leaf_detect) from the raw parquet, so a
 # wrong engine count or label still fails the hash. Paths are listed as
 # (conditions...) tuples; JSON rendering matches serde_rule
 # (`operators/tree.py`). t2 always grades at sf0.01 (driver contract).
 _GOLDEN_SF001_PATHS: list[tuple[tuple[str, str, str], ...]] = [
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", "<=", "75391.3"), ("l_discount", "<=", "0.01"), ("l_extendedprice", "<=", "11534.75")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", "<=", "75391.3"), ("l_discount", "<=", "0.01"), ("l_extendedprice", ">", "11534.75")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", "<=", "75391.3"), ("l_discount", ">", "0.01"), ("l_quantity", "<=", "16.0")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", "<=", "75391.3"), ("l_discount", ">", "0.01"), ("l_quantity", ">", "16.0")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", ">", "75391.3"), ("l_extendedprice", "<=", "76668.03"), ("l_tax", "<=", "0.04")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", ">", "75391.3"), ("l_extendedprice", "<=", "76668.03"), ("l_tax", ">", "0.04")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", ">", "75391.3"), ("l_extendedprice", ">", "76668.03"), ("l_quantity", "<=", "39.0")),
-    (("l_extendedprice", "<=", "86142.36"), ("l_extendedprice", ">", "75391.3"), ("l_extendedprice", ">", "76668.03"), ("l_quantity", ">", "39.0")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", "<=", "96892.86"), ("l_quantity", "<=", "8.0"), ("l_extendedprice", "<=", "88447.03")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", "<=", "96892.86"), ("l_quantity", "<=", "8.0"), ("l_extendedprice", ">", "88447.03")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", "<=", "96892.86"), ("l_quantity", ">", "8.0"), ("l_quantity", "<=", "24.0")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", "<=", "96892.86"), ("l_quantity", ">", "8.0"), ("l_quantity", ">", "24.0")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", ">", "96892.86"), ("l_discount", "<=", "0.05"), ("l_tax", "<=", "0.05")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", ">", "96892.86"), ("l_discount", "<=", "0.05"), ("l_tax", ">", "0.05")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", ">", "96892.86"), ("l_discount", ">", "0.05"), ("l_quantity", "<=", "20.0")),
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", ">", "96892.86"), ("l_discount", ">", "0.05"), ("l_quantity", ">", "20.0")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", "<=", "30.0"), ("l_extendedprice", "<=", "9898.31"), ("l_extendedprice", "<=", "3446.54")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", "<=", "30.0"), ("l_extendedprice", "<=", "9898.31"), ("l_extendedprice", ">", "3446.54")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", "<=", "30.0"), ("l_extendedprice", ">", "9898.31"), ("l_quantity", "<=", "4.0")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", "<=", "30.0"), ("l_extendedprice", ">", "9898.31"), ("l_quantity", ">", "4.0")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", ">", "30.0"), ("l_discount", "<=", "0.01"), ("l_extendedprice", "<=", "11512.85")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", ">", "30.0"), ("l_discount", "<=", "0.01"), ("l_extendedprice", ">", "11512.85")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", ">", "30.0"), ("l_discount", ">", "0.01"), ("l_discount", "<=", "0.02")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", ">", "30.0"), ("l_discount", ">", "0.01"), ("l_discount", ">", "0.02")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", "<=", "96469.67"), ("l_quantity", "<=", "5.0"), ("l_extendedprice", "<=", "88793.91")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", "<=", "96469.67"), ("l_quantity", "<=", "5.0"), ("l_extendedprice", ">", "88793.91")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", "<=", "96469.67"), ("l_quantity", ">", "5.0"), ("l_extendedprice", "<=", "94137.17")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", "<=", "96469.67"), ("l_quantity", ">", "5.0"), ("l_extendedprice", ">", "94137.17")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", ">", "96469.67"), ("l_discount", "<=", "0.05"), ("l_quantity", "<=", "13.0")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", ">", "96469.67"), ("l_discount", "<=", "0.05"), ("l_quantity", ">", "13.0")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", ">", "96469.67"), ("l_discount", ">", "0.05"), ("l_discount", "<=", "0.09")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", ">", "96469.67"), ("l_discount", ">", "0.05"), ("l_discount", ">", "0.09")),
 ]
 
 
 # The same sf0.01 model after error-based pruning (CF = 0.25,
 # `operators/pruning.py`): the binomial upper-bound comparison collapses
-# one depth-4 sibling pair — under (extendedprice > 86142.36,
-# > 96892.86, discount > 0.05), whose two leaves are both R — to a
-# depth-3 majority leaf; the other 14 leaves survive. Deterministic
+# four depth-4 sibling pairs — under (extendedprice <= 86771.4,
+# quantity <= 30.0, extendedprice > 9898.31), under (extendedprice >
+# 86771.4, <= 96469.67, quantity <= 5.0) and under (extendedprice >
+# 86771.4, > 96469.67) with either discount side of 0.05 — to depth-3
+# majority leaves; the other 8 leaves survive. Deterministic
 # like the unpruned golden (pure driver-side math on pinned leaf
 # histograms); DuckDB recomputes each pruned leaf's n/label from raw
 # data, so only the STRUCTURE is pinned.
 _PRUNED_SF001_PREFIXES: list[tuple[tuple[str, str, str], ...]] = [
-    (("l_extendedprice", ">", "86142.36"), ("l_extendedprice", ">", "96892.86"), ("l_discount", ">", "0.05")),
+    (("l_extendedprice", "<=", "86771.4"), ("l_quantity", "<=", "30.0"), ("l_extendedprice", ">", "9898.31")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", "<=", "96469.67"), ("l_quantity", "<=", "5.0")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", ">", "96469.67"), ("l_discount", "<=", "0.05")),
+    (("l_extendedprice", ">", "86771.4"), ("l_extendedprice", ">", "96469.67"), ("l_discount", ">", "0.05")),
 ]
 _GOLDEN_SF001_PRUNED_PATHS: list[tuple[tuple[str, str, str], ...]] = [
     p for p in _GOLDEN_SF001_PATHS if p[:3] not in _PRUNED_SF001_PREFIXES

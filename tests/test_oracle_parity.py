@@ -101,7 +101,7 @@ def test_c45_accuracy_pinned_at_driver_scale(spark, sf_oracle):
     got = registry.queries()["c45_accuracy"](spark, sf_oracle).collect()[0]
     assert got["n_rules"] == len(model.rules)
     assert abs(got["train_accuracy"] - expected) < 1e-6
-    assert got["train_accuracy"] == pytest.approx(0.343533, abs=1e-6)
+    assert got["train_accuracy"] == pytest.approx(0.342983, abs=1e-6)
 
 
 def test_c45_holdout_eval_pinned_at_driver_scale(spark, sf_oracle):
@@ -131,15 +131,15 @@ def test_c45_holdout_eval_pinned_at_driver_scale(spark, sf_oracle):
     assert got["n_test"] == n_hold
     assert got["n_train"] == n_total - n_hold
     assert got["n_rules"] == 16
-    assert got["train_accuracy"] == pytest.approx(0.345324, abs=1e-6)
-    assert got["holdout_accuracy"] == pytest.approx(0.327648, abs=1e-6)
+    assert got["train_accuracy"] == pytest.approx(0.342031, abs=1e-6)
+    assert got["holdout_accuracy"] == pytest.approx(0.325901, abs=1e-6)
     # EBP pruning (r8): 16 → 13 rules and holdout accuracy does not
     # drop — the generalization trade pruning exists to make (here the
     # collapsed subtrees' majority leaves predict identically on the
     # holdout, so accuracy is exactly preserved)
     assert got["n_rules_pruned"] == 13
     assert got["pruned_holdout_accuracy"] == pytest.approx(
-        0.327648, abs=1e-6
+        0.325901, abs=1e-6
     )
     assert got["pruned_holdout_accuracy"] >= got["holdout_accuracy"] - 1e-9
 

@@ -159,15 +159,77 @@ def test_snap_numeric_renders_literals_exactly(spark):
     assert [r["m"] for r in got[: len(m_vals)]] == want_m
 
 
-def test_prologue_edges_match_lit_list_percentiles(spark):
-    """The prologue's split candidates equal an independent NumPy
-    evaluation of its rule over the same rows. A value's bucket is the
-    value rounded half-to-even to 9 significant bits (here through
-    ``frexp``/``ldexp``; the engine uses Veltkamp's split), and
-    probability ``j/max_bins`` picks the largest value of the first
-    bucket, in value order, whose cumulative count reaches it. (The
-    name is from when this pinned ``percentile_approx`` called through
-    ``F.lit(list)``.)"""
+def _quantile_edges(values, max_bins):
+    """NumPy's ``inverted_cdf`` quantiles at j/max_bins (j = 0..max_bins),
+    distinct and sorted."""
+    qs = np.quantile(
+        np.array(values, dtype=np.float64),
+        np.arange(max_bins + 1) / max_bins,
+        method="inverted_cdf",
+    )
+    return sorted(set(qs.tolist()))
+
+
+def _prologue_edges(base, num, max_bins, **kw):
+    _, edges, _ = Tr._prologue_scan(
+        base, nulls="reject", cat_names=[], num_names=num, label="y",
+        cat_domains={}, max_bins=max_bins, **kw,
+    )
+    return edges
+
+
+@contextmanager
+def _bucket_bits(monkeypatch):
+    """Record the roundings the prologue keys values by."""
+    seen = set()
+    real = Tr._bucket_sql
+
+    def spy(x, bits=9):
+        seen.add(bits)
+        return real(x, bits)
+
+    monkeypatch.setattr(Tr, "_bucket_sql", spy)
+    yield seen
+    monkeypatch.setattr(Tr, "_bucket_sql", real)
+
+
+def test_prologue_edges_match_lit_list_percentiles(spark, monkeypatch):
+    """The prologue's split candidates are the exact quantiles
+    j/max_bins of each column — NumPy's ``inverted_cdf`` over the same
+    rows — both when its first histogram holds every distinct value and
+    when ``max_rows`` forces the bucketed histogram and its refinement.
+    A hand-worked case pins the rank rule on ties at the 9-bit buckets'
+    rounding midpoints. (The name is from when this pinned
+    ``percentile_approx`` called through ``F.lit(list)``.)"""
+    schema = T.StructType([
+        T.StructField("i", T.IntegerType()),
+        T.StructField("m", T.DecimalType(10, 2)),
+        T.StructField("y", T.StringType()),
+    ])
+    # 513, 515, 257.50, 258.50 and 1998 lie halfway between two 9-bit
+    # values; 1992/1993 and 1995/1996 share a 9-bit bucket
+    hand = spark.createDataFrame(
+        [
+            (1998, Decimal("257.50"), "p"),
+            (513, Decimal("258.50"), "q"),
+            (1995, Decimal("257.50"), "p"),
+            (513, Decimal("256.25"), "q"),
+            (1992, Decimal("259.50"), "p"),
+            (515, Decimal("300.00"), "q"),
+            (1996, Decimal("257.50"), "p"),
+            (1993, Decimal("258.50"), "q"),
+        ],
+        schema,
+    )
+    # 8 values, 4 bins: ranks ⌈8j/4⌉ = 1, 2, 4, 6, 8 (1 for j = 0) of
+    # i: 513 513 515 1992 1993 1995 1996 1998
+    # m: 256.25 257.50 257.50 257.50 258.50 258.50 259.50 300.00
+    want = {"i": [513.0, 1992.0, 1995.0, 1998.0],
+            "m": [256.25, 257.5, 258.5, 300.0]}
+    # 13 distinct values, 9 buckets: max_rows=10 takes the bucketed path
+    for max_rows in (Tr._PROLOGUE_MAX_ROWS, 10):
+        assert _prologue_edges(hand, ["i", "m"], 4, max_rows=max_rows) == want
+
     rng = np.random.default_rng(7)
     rows = [
         (
@@ -187,23 +249,55 @@ def test_prologue_edges_match_lit_list_percentiles(spark):
     base = spark.createDataFrame(rows, schema)
     num = ["d", "i", "m"]
     for max_bins in (16, 256):
-        _, edges, _ = Tr._prologue_scan(
-            base, nulls="reject", cat_names=[], num_names=num, label="y",
-            cat_domains={}, max_bins=max_bins,
+        want = {
+            c: _quantile_edges([float(r[j]) for r in rows], max_bins)
+            for j, c in enumerate(num)
+        }
+        assert _prologue_edges(base, num, max_bins) == want
+        assert all(len(v) <= max_bins + 1 for v in want.values())
+        # 3,901 distinct values, 2,271 buckets of 9 bits
+        with _bucket_bits(monkeypatch) as bits:
+            assert _prologue_edges(base, num, max_bins, max_rows=3_000) == want
+        assert bits == {9}
+
+
+def test_prologue_keeps_every_year_and_refines_crowded_columns(
+    spark, monkeypatch
+):
+    """Values far from zero keep full resolution: each of seven years is
+    a candidate (9-bit buckets lump 1992-1994 and 1995-1997 together),
+    and the quantiles of epoch seconds spread over one year — a handful
+    of 9-bit buckets — are exact also when ``max_rows`` makes the
+    prologue refine those buckets at finer roundings."""
+    years = list(range(1992, 1999))
+    counts = [50, 80, 120, 60, 90, 70, 30]
+    rng = np.random.default_rng(3)
+    stamps = (1.7e9 + rng.integers(0, 365 * 86_400, size=500)).tolist()
+    rows = [
+        (y, stamps[k % len(stamps)], "pq"[k % 2])
+        for k, y in enumerate(
+            y for y, n in zip(years, counts) for _ in range(n)
         )
-        want = {}
-        for j, c in enumerate(num):
-            x = np.sort(np.array([float(r[j]) for r in rows]))
-            m, e = np.frexp(x)
-            key = np.ldexp(np.round(m * 512) / 512, e)
-            last = np.flatnonzero(np.r_[key[1:] != key[:-1], True])
-            picks = {
-                int(np.searchsorted(last + 1, -(-k * len(x) // max_bins)))
-                for k in range(max_bins + 1)
-            }
-            want[c] = [float(x[last[b]]) for b in sorted(picks)]
-        assert edges == want
-        assert all(len(v) <= max_bins + 1 for v in edges.values())
+    ]
+    schema = T.StructType([
+        T.StructField("year", T.IntegerType()),
+        T.StructField("ts", T.DoubleType()),
+        T.StructField("y", T.StringType()),
+    ])
+    base = spark.createDataFrame(rows, schema)
+    edges = _prologue_edges(base, ["year", "ts"], 256)
+    assert edges["year"] == [float(y) for y in years]
+    want = {
+        c: _quantile_edges([r[j] for r in rows], 16)
+        for j, c in enumerate(["year", "ts"])
+    }
+    assert len(want["ts"]) == 17
+    for max_rows in (Tr._PROLOGUE_MAX_ROWS, 64):
+        with _bucket_bits(monkeypatch) as bits:
+            got = _prologue_edges(base, ["year", "ts"], 16, max_rows=max_rows)
+        assert got == want
+    # 9-bit buckets first, then finer ones
+    assert min(bits) == 9 and max(bits) > 9
 
 
 def test_model_json_is_layout_invariant(spark, sf_small):

@@ -10,8 +10,8 @@ loop is driver-side Python around DataFrame jobs:
   through per-parent lookup arrays compiled into the scan — no join, no
   shuffle; frontier rules partition the data, so each row gets exactly
   one ``rid``;
-- the training DataFrame is cached once (the reference re-reads HDFS every
-  level, `Main.java:200`);
+- the training input is read from its source once and materialized (the
+  reference re-reads HDFS every level, `Main.java:200`);
 - per level: contingency aggregation + gain-ratio stats (c45_stats) and a
   ``collect()`` of a ≤(|frontier|×|attrs|)-row result replaces the
   reference's HDFS file round-trip (`Main.java:218-269`).
@@ -534,7 +534,6 @@ def _prologue_scan(
     label: str,
     cat_domains: dict[str, list[str]],
     max_bins: int,
-    apply_to=None,
     max_rows: int = _PROLOGUE_MAX_ROWS,
 ) -> tuple[DataFrame, dict[str, list[float]], dict[str, int]]:
     """ONE grouped aggregate over the training projection computing
@@ -573,19 +572,13 @@ def _prologue_scan(
     the others are refined by aggregates over just the rows of their
     buckets, each at a rounding fine enough to make progress and coarse
     enough to fit ``max_rows``, until every bucket holding one is a
-    single value. These passes read ``apply_to``'s relation when there
-    is one.
+    single value.
 
-    At 100 TB this is THE scan that matters: the previous design paid
-    three full corpus passes before level 0 (null audit, row count,
-    quantile sample) — one aggregate trades a little per-row CPU for
-    two entire passes of I/O.
-
-    ``apply_to`` (optional zero-arg callable) supplies a DIFFERENT
-    relation for the null-policy transforms to apply to — the caller's
-    concurrently-materialized checkpoint of the same rows. It is
-    resolved only AFTER the first aggregate has run, so the caller's
-    materialization job and this scan overlap."""
+    One aggregate serves the null audit, the row counts and the
+    candidates, trading a little per-row CPU for two passes that
+    separate actions would cost. ``train()`` hands in its materialized
+    checkpoint, so every pass here reads memory blocks, never the
+    source."""
     if nulls not in ("reject", "missing", "fractional"):
         raise ValueError(
             "nulls must be 'reject', 'missing' or 'fractional', "
@@ -632,8 +625,6 @@ def _prologue_scan(
     hist = histogram(
         base, [(str(i), x, x) for i, x in enumerate(xs)] + null_entries
     )
-    if apply_to is not None:
-        base = apply_to()
     bits = 9
     if hist is None:
         hist = histogram(
@@ -815,7 +806,6 @@ def train(
     max_depth: int = 8,
     min_ratio: float = 0.1,
     min_rows: int = 2,
-    cache: bool = True,
     max_bins: int = 256,
     driver_stats_max_rows: int = _DRIVER_STATS_MAX_ROWS,
     bug_compat: bool = False,
@@ -891,20 +881,19 @@ def train(
 
     spark = df.sparkSession
     base = df.select(*attr_order, schema.label)
-    # ONE prologue scan: null audit + split candidates in a single
-    # grouped aggregate (plus refinement passes over the checkpoint when
-    # the columns hold more distinct values than its collect bound).
-    # The candidates depend on the rows alone, not on their layout, so
-    # the aggregate may run on the raw scan
-    # (pre-repartition: it must not drag a shuffle through
-    # re-execution) — and with cache=True it OVERLAPS the spread
-    # checkpoint's materialization:
-    # the two jobs only share the source scan, and serially they cost
-    # ~1.1 s + ~1.3 s at sf0.1 while overlapped they cost the max.
-    # The null-policy transforms and the snap then stack on the
-    # checkpoint, so level 0's eager checkpoint below reads memory
-    # blocks instead of re-running scan+shuffle.
-    prologue_kw = dict(
+    # the source is read ONCE: a small parquet scan may yield very few
+    # partitions, and every later pass would then run on that many
+    # cores, so the table is spread across the cluster and materialized
+    # here. The prologue (null audit + split candidates in one grouped
+    # aggregate, plus refinement passes when the columns hold more
+    # distinct values than its collect bound) and level 0 read these
+    # memory blocks; the candidates depend on the rows alone, not on
+    # their layout.
+    par = spark.sparkContext.defaultParallelism
+    if base.rdd.getNumPartitions() < par:
+        base = base.repartition(par)
+    base, edges, dirty = _prologue_scan(
+        base.localCheckpoint(eager=True),
         nulls=nulls,
         cat_names=cat_names,
         num_names=num_names,
@@ -912,28 +901,6 @@ def train(
         cat_domains=cat_domains,  # mutated: missing category appended
         max_bins=max_bins,
     )
-    if cache:
-        # a small parquet scan may yield very few partitions; every
-        # per-level pass would then run on that many cores — spread the
-        # (to-be-checkpointed) table across the cluster once
-        par = spark.sparkContext.defaultParallelism
-        spread = base
-        if base.rdd.getNumPartitions() < par:
-            spread = base.repartition(par)
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(1)
-        try:
-            raw_fut = pool.submit(
-                lambda: spread.localCheckpoint(eager=True)
-            )
-            base, edges, dirty = _prologue_scan(
-                base, apply_to=raw_fut.result, **prologue_kw
-            )
-        finally:
-            pool.shutdown(wait=True)
-    else:
-        base, edges, dirty = _prologue_scan(base, **prologue_kw)
     base = _snap_numeric(base, edges)
     # Quinlan-fractional rows carry a weight only when some feature is
     # NULL: a clean table keeps the count(*) plan and its rid update
@@ -955,18 +922,14 @@ def train(
     # level's split conditions instead of every root-to-frontier
     # conjunction — a flat frontier CASE WHEN grows with the full rule
     # set and at depth ≥8 overflows JVM method-size limits (codegen
-    # fallback → interpreted row scans). The checkpoint also truncates
-    # the max_bins-literal snap lineage (MLlib's iterative trainers
-    # checkpoint for the same reason). Leaf rows drop out as they
-    # resolve, so later levels scan strictly less data.
+    # fallback → interpreted row scans). The per-level checkpoint
+    # (_grow_levels) also truncates the max_bins-literal snap lineage
+    # (MLlib's iterative trainers checkpoint for the same reason). Leaf
+    # rows drop out as they resolve, so later levels scan strictly less
+    # data.
     level = base.withColumn(S.RID, F.lit(0).cast("int"))
     if weight:
         level = level.withColumn(weight, F.lit(1).cast(FR.W_TYPE))
-    if cache:
-        # eager: folding this materialization into level 0's action was
-        # measured neutral-to-worse; the separate job keeps the first
-        # level's timing observable
-        level = level.localCheckpoint(eager=True)
 
     # per-node contingency row bound for the driver-side stats path:
     # classes × (1 cc pseudo-attr + Σ cat domains + Σ numeric edge
@@ -999,7 +962,6 @@ def train(
             max_depth=max_depth,
             min_ratio=min_ratio,
             min_rows=min_rows,
-            cache=cache,
             stat_rows_per_node=stat_rows_per_node,
             driver_stats_max_rows=driver_stats_max_rows,
             weight=weight,
@@ -1531,7 +1493,6 @@ def _grow_levels(
     max_depth: int,
     min_ratio: float,
     min_rows: int,
-    cache: bool,
     stat_rows_per_node: int = 0,
     driver_stats_max_rows: int = _DRIVER_STATS_MAX_ROWS,
     weight: str | None = None,
@@ -1567,6 +1528,15 @@ def _grow_levels(
         min_rows=min_rows,
     )
     while frontier:
+        # per level, level 0 included: without it the numeric snap runs
+        # in both level 0's action and level 1's materialization. Later
+        # levels shrink as leaves resolve, and every level's first stage
+        # stays identical for the codegen cache (a flat frontier CASE
+        # WHEN overflows JVM 64KB method limits at depth ≥ 8 →
+        # interpreted fallback); measured faster than interval
+        # checkpointing. eager=False folds the materialization into the
+        # level's stats action — one fewer job per level.
+        level = level.localCheckpoint(eager=False)
         depth = frontier[0].depth  # level-synchronous: all nodes equal
         hist_only = depth >= max_depth
         cont = None
@@ -1642,15 +1612,6 @@ def _grow_levels(
             # frontier-bounded, not contingency-sized
             masses = FR._collect_split_masses(cont, splits, label_domain)
         level = _apply_splits(level, splits, masses)
-        # per-level: the materialization shrinks the data as leaves
-        # resolve and keeps every level's first stage identical for the
-        # codegen cache (a flat frontier CASE WHEN overflows JVM 64KB
-        # method limits at depth ≥ 8 → interpreted fallback); measured
-        # faster than interval checkpointing. eager=False folds the
-        # materialization job into the next level's stats action — one
-        # fewer job dispatch per level.
-        if cache:
-            level = level.localCheckpoint(eager=False)
 
 
 def _majority(h: dict[str, int], label_domain: list[str]) -> str:

@@ -356,19 +356,14 @@ def test_k100_training_and_relational_invariance(spark, sf_small, tmp_path):
 
     base = rules_of(sf_small, 50)
     big = rules_of(out, 50 * K)
-    # What the architecture GUARANTEES at Kx duplication — and what it
-    # deliberately does not. Exact: rule count, total row conservation
-    # (every training row reaches exactly one leaf), and the root-level
-    # statistics (pinned via numeric_best_split below, whose candidate
-    # set is the exact distinct boundaries). Approximate BY DESIGN:
-    # deep numeric boundaries come from percentile_approx GK sketches
-    # (tree.py's quantile binning — the thing that bounds candidate
-    # cardinality at 100 TB), and a sketch over 100x rows lands on
-    # slightly different sample points (measured: 19954.07 -> 20017.19,
-    # 0.3%), occasionally flipping one deep node's best attribute. So
-    # the pin is: >= 2/3 of leaves structurally identical ((attr, op)
-    # sequence equal, every boundary within 1%, n exactly 100x), label
-    # multiset drift bounded by the one-subtree allowance.
+    # EXACT at Kx duplication, every leaf. A numeric column's split
+    # candidates are exact quantiles (tree.py's _prologue_scan): of n
+    # values, edge j of B is the ⌈j·n/B⌉-th smallest. Duplicated K
+    # times, that edge is the ⌈j·K·n/B⌉-th smallest of K·n values,
+    # which is the ⌈⌈j·K·n/B⌉/K⌉-th = ⌈j·n/B⌉-th smallest of the
+    # originals: the same value. Same candidates, counts all scaled by
+    # K, so every entropy and gain ratio is unchanged, and min_rows
+    # scaled by K stops the same nodes: the same rules, n exactly Kx.
     assert len(base) == len(big) > 0
     assert sum(n for *_, n in big) == K * sum(n for *_, n in base)
     from collections import Counter
@@ -395,7 +390,8 @@ def test_k100_training_and_relational_invariance(spark, sf_small, tmp_path):
             if vals_ok and gl == label and gn == K * n:
                 matched += 1
                 break
-    assert matched >= (len(base) * 2) // 3, (matched, len(base))
+    assert matched == len(base), (matched, len(base))
+    assert big == [(c, l, K * n) for c, l, n in base]
 
     from c4_5decisiontreebasedonmapreduce_spark import registry
 

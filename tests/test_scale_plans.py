@@ -953,9 +953,10 @@ def test_train_prologue_is_one_scan(spark, sf_small):
     (operators/tree.py:_prologue_scan). The previous design paid three
     full corpus passes here — at 100 TB, two entire extra reads per
     training run. AQE executes the single two-stage aggregate as ≤ 2
-    jobs (scan stage + final stage over the 1-row shuffle); the scan
-    stage is the only one that touches the corpus. Three separate
-    actions would show ≥ 3 job-group jobs."""
+    jobs (scan stage + final stage over the histogram shuffle). Here
+    it reads the raw projection; inside train() it reads the spread
+    checkpoint instead (test_train_reads_its_source_once). Three
+    separate actions would show ≥ 3 job-group jobs."""
     from c4_5decisiontreebasedonmapreduce_spark.operators import tree as Tr
 
     schema = registry.LINEITEM_TRAINING_SCHEMA
@@ -984,6 +985,29 @@ def test_train_prologue_is_one_scan(spark, sf_small):
     assert all(len(e) > 1 for e in edges.values()), {
         k: len(v) for k, v in edges.items()
     }
+
+
+def test_train_reads_its_source_once(spark, sf_small, monkeypatch):
+    """train() scans its file-backed source once, to spread and
+    materialize it: the prologue's aggregate and refinement passes get
+    that checkpoint (an ExistingRDD), not a second scan of the files."""
+    from c4_5decisiontreebasedonmapreduce_spark.operators import tree as Tr
+
+    prologue, plans = Tr._prologue_scan, []
+
+    def spy(base, **kw):
+        plans.append(plan_of(base))
+        return prologue(base, **kw)
+
+    monkeypatch.setattr(Tr, "_prologue_scan", spy)
+    Tr.train(
+        registry.lineitem_training(spark, sf_small),
+        registry.LINEITEM_TRAINING_SCHEMA,
+        max_depth=1,
+    )
+    assert len(plans) == 1
+    assert "Scan parquet" not in plans[0], plans[0]
+    assert "Scan ExistingRDD" in plans[0], plans[0]
 
 
 def test_decontam_spans_no_cartesian_no_python(spark, sf_small):

@@ -146,7 +146,7 @@ def test_predict_partition_invariant(spark, weather, schema):
 
 
 def test_model_save_load_roundtrip(tmp_path, spark, schema, weather):
-    model = Tr.train(weather, schema, max_depth=4, cache=False)
+    model = Tr.train(weather, schema, max_depth=4)
     p = str(tmp_path / "model.json")
     model.save(p)
     loaded = Tr.DecisionListModel.load(p)
@@ -164,7 +164,7 @@ def test_model_parquet_sink_roundtrip(tmp_path, spark, schema, weather):
     decision list exactly (rule order via rule_id, numeric half-space
     values re-typed from their string encoding) and predict
     identically."""
-    model = Tr.train(weather, schema, max_depth=4, cache=False)
+    model = Tr.train(weather, schema, max_depth=4)
     p = str(tmp_path / "model_parquet")
     model.save_parquet(spark, p)
     loaded = Tr.DecisionListModel.load_parquet(spark, p)
@@ -182,7 +182,7 @@ def test_trie_prediction_equals_flat_chain(spark, schema, weather):
     """The trie compile must agree with the naive rule-by-rule chain."""
     from pyspark.sql import functions as F
 
-    model = Tr.train(weather, schema, max_depth=4, cache=False)
+    model = Tr.train(weather, schema, max_depth=4)
     flat = F.lit(None).cast("string")
     for r in reversed(model.rules):
         flat = F.when(r.predicate(), F.lit(r.label)).otherwise(flat)
@@ -329,7 +329,7 @@ def test_reference_wire_format_preserves_predictions(spark, schema, weather):
     weather tree in the reference's exact wire format (`Rule.java:22-33`,
     attribute ids in attributes-file order), parse it back, and the
     reconstructed model must predict identically on every row."""
-    model = Tr.train(weather, schema, max_depth=5, cache=False)
+    model = Tr.train(weather, schema, max_depth=5)
     order = [a.name for a in schema.features]
     lines = model.to_reference_text(order)
     assert lines and all(":" in ln for ln in lines)
@@ -348,7 +348,7 @@ def test_model_sql_export_matches_transform(tmp_path, spark, schema, weather, sf
     import duckdb
 
     # weather model over its 14-row table
-    m = Tr.train(weather, schema, max_depth=4, cache=False)
+    m = Tr.train(weather, schema, max_depth=4)
     case = m.to_sql_case()
     pdf = weather.toPandas()
     con = duckdb.connect()

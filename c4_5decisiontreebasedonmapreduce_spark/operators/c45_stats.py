@@ -97,8 +97,10 @@ def melt_mixed(
     (`Main.java:59-123`) with the combiner it never had: the training
     pass per tree level becomes ONE map-side-combined exchange whose
     grouped output feeds class histograms, categorical gain ratios and
-    numeric best-splits (via ReuseExchange — the three consumers share
-    the identical child plan).
+    numeric best-splits. Collected to the driver, that is one exchange
+    and one read of the level; reduced distributed, its consumers do
+    not share the exchange, and each re-reads the level (the wide
+    table's 600-node level ran four map stages over it).
 
     ``weight`` names a row-weight column to carry along (Quinlan-
     fractional training); NULL attribute values are then KEPT, so their

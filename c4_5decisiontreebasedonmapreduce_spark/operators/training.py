@@ -75,15 +75,16 @@ def wide_training(
     Purpose (VERDICT r7 item 4): the label is group-determined with 30%
     deterministic flip noise, so the root split is the 600-way
     categorical and the depth-1 frontier is ``cat_domain`` nodes — which
-    pushes the bounded-contingency estimate
+    pushes the declared contingency estimate
     ``|frontier| × classes × (1 + Σ|domains| + Σ|edges|)`` past
-    ``tree._DRIVER_STATS_MAX_ROWS`` BY THE BOUND (600 × ~17.6k ≈ 10.6M
-    > 4M with default ``max_bins``), flipping training onto the fully
-    distributed per-level reduction mid-run with no test override. The
-    noise numerics keep the depth-1 nodes impure so the distributed
-    argmax does real work. Data-size-independent: the estimate counts
-    domains and quantile edges, not rows, so the switch happens at every
-    scale factor identically."""
+    ``tree._DRIVER_STATS_MAX_ROWS`` (600 × ~17.6k ≈ 10.6M > 4M with
+    default ``max_bins``). The driver guard is the smaller of that
+    estimate and the rows alive × (1 + |features|) = rows × 34, so the
+    depth-1 level flips onto the fully distributed per-level reduction
+    with no test override once the table holds more than ~118k rows
+    (sf0.1), and stays on the driver below that (sf0.001, sf0.01). The
+    noise numerics keep the depth-1 nodes impure so the argmax does
+    real work."""
     li = load_table(spark, sf_dir, "lineitem")
     from pyspark.sql import functions as F
 

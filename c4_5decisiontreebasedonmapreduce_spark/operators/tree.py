@@ -12,9 +12,10 @@ loop is driver-side Python around DataFrame jobs:
   one ``rid``;
 - the training input is read from its source once and materialized (the
   reference re-reads HDFS every level, `Main.java:200`);
-- per level: contingency aggregation + gain-ratio stats (c45_stats) and a
-  ``collect()`` of a ≤(|frontier|×|attrs|)-row result replaces the
-  reference's HDFS file round-trip (`Main.java:218-269`).
+- per level: one contingency aggregation, reduced in numpy after a
+  bounded Arrow collect, or by the distributed gain-ratio stats
+  (c45_stats) and a ``collect()`` of a ≤(|frontier|×|attrs|)-row result,
+  replaces the reference's HDFS file round-trip (`Main.java:218-269`).
 
 Deliberate divergences from the reference (SURVEY.md quirk ledger):
 leaf labels are honest majority votes, not last-seen class (Q3); numeric
@@ -30,6 +31,8 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,9 +47,10 @@ OP_EQ, OP_LE, OP_GT = "==", "<=", ">"
 # Upper bound on contingency rows the driver-side stats path may collect.
 # The contingency is ≤ |frontier| × (Σ_cat |domain| + Σ_num bins) × |classes|
 # rows REGARDLESS of data volume (quantile binning caps numeric cardinality),
-# so at ~40 bytes/row this caps driver transfer at ~160 MB — the same
-# bounded-stats-collection contract MLlib's tree trainer relies on. Wider
-# frontiers/schemas fall back to the fully distributed reduction.
+# and below the root also ≤ rows alive × (1 + |features|); the guard takes
+# the smaller. At ~40 bytes/row this caps driver transfer at ~160 MB — the
+# same bounded-stats-collection contract MLlib's tree trainer relies on.
+# Levels past it fall back to the fully distributed reduction.
 _DRIVER_STATS_MAX_ROWS = 4_000_000
 
 
@@ -170,7 +174,10 @@ class DecisionListModel:
         decision list deterministically regardless of file/row order.
         ``n`` is BIGINT for row counts and DOUBLE once any rule carries a
         fractional mass (``nulls='fractional'``), so both read back
-        exactly, as the same Python type."""
+        exactly, as the same Python type.
+
+        The rows reach Spark as one Arrow table rather than as Python
+        tuples that ``createDataFrame`` would serialize one by one."""
         counts = all(isinstance(r.n, int) for r in self.rules)
         schema = T.StructType(
             [
@@ -192,17 +199,26 @@ class DecisionListModel:
                 T.StructField("depth", T.IntegerType()),
             ]
         )
-        rows = [
-            (
-                i,
-                [(c.attr, c.op, str(c.value)) for c in r.conditions],
-                r.label,
-                r.n if counts else float(r.n),
-                r.depth,
-            )
-            for i, r in enumerate(self.rules)
-        ]
-        return spark.createDataFrame(rows, schema)
+        cond = pa.struct([(f, pa.string()) for f in ("attr", "op", "value")])
+        table = pa.table(
+            {
+                "rule_id": pa.array(range(len(self.rules)), pa.int32()),
+                "conditions": pa.array(
+                    [
+                        [(c.attr, c.op, str(c.value)) for c in r.conditions]
+                        for r in self.rules
+                    ],
+                    pa.list_(cond),
+                ),
+                "label": pa.array([r.label for r in self.rules], pa.string()),
+                "n": pa.array(
+                    [r.n if counts else float(r.n) for r in self.rules],
+                    pa.int64() if counts else pa.float64(),
+                ),
+                "depth": pa.array([r.depth for r in self.rules], pa.int32()),
+            }
+        )
+        return spark.createDataFrame(table, schema)
 
     def to_sql_case(self, default: str | None = None) -> str:
         """Render the model as ONE portable ANSI SQL CASE expression —
@@ -854,11 +870,18 @@ def train(
     One Spark action and ONE data-sized exchange per level: the mixed
     melt + grouped count; class histograms, categorical gain ratios and
     numeric best-splits all derive from that contingency. When the
-    contingency's size bound (|frontier| × Σ domains/bins × |classes| ≤
-    ``driver_stats_max_rows`` — data-volume-independent thanks to
-    binning) permits, it is collected via Arrow and reduced in numpy
-    (see :func:`_driver_level_stats`); otherwise the reduction runs
+    contingency's row bound is ≤ ``driver_stats_max_rows``, it is
+    collected via Arrow and reduced in numpy (see
+    :func:`_driver_level_stats`); otherwise the reduction runs
     distributed and the collected result is ≤ |frontier|×|attrs| rows.
+    The bound is the declared product |frontier| × |classes| × (1 + Σ
+    domains + Σ bins), which binning keeps independent of data volume;
+    on unweighted levels below the root it is the smaller of that and
+    the rows still alive × (1 + |features|), since each row adds at
+    most that many contingency rows. So the wide 600-node level of a
+    small table stays on the driver, and moves to the distributed
+    reduction only when its rows alive × (1 + |features|) pass the
+    bound.
     """
     if bug_compat:
         from c4_5decisiontreebasedonmapreduce_spark.operators.bug_compat import (
@@ -1276,23 +1299,56 @@ def _apply_splits(
 
 def _xlog2x_np(a: np.ndarray) -> np.ndarray:
     """``c*log2(c)`` with 0·log2(0)=0 — numpy twin of functions.entropy."""
-    out = np.zeros_like(a, dtype=np.float64)
-    m = a > 0
-    out[m] = a[m] * np.log2(a[m])
+    out = np.zeros(np.shape(a))
+    np.log2(a, out=out, where=a > 0)
+    out *= a
     return out
 
 
-def _entropy_np(n: float, sum_xlog2x: float) -> float:
-    """``log2(n) - Σc·log2(c)/n`` — numpy twin of entropy_from_counts."""
-    return float(np.log2(n) - sum_xlog2x / n) if n > 0 else 0.0
+def _entropy_np(n: np.ndarray, sum_xlog2x: np.ndarray) -> np.ndarray:
+    """``log2(n) - Σc·log2(c)/n`` per element, 0 where ``n`` is 0 —
+    numpy twin of entropy_from_counts."""
+    pos = n > 0
+    safe = np.where(pos, n, 1.0)
+    return np.where(pos, np.log2(safe) - sum_xlog2x / safe, 0.0)
 
 
-def _gain_ratio_py(info: float, entr: float, split_info: float) -> float:
-    """Python twin of :func:`c45_stats._gain_ratio_col` (incl. the
+def _gain_ratio_np(
+    info: np.ndarray, entr: np.ndarray, split_info: np.ndarray
+) -> np.ndarray:
+    """Numpy twin of :func:`c45_stats._gain_ratio_col` (incl. the
     reference's SplitI == 0 special case, `MyReducer.java:282-298`)."""
-    if split_info == 0.0:
-        return 0.0 if info == 0.0 else 0.00001
-    return max(0.0, info - entr) / split_info
+    with np.errstate(divide="ignore", invalid="ignore"):
+        gr = np.maximum(0.0, info - entr) / split_info
+    return np.where(split_info == 0.0, np.where(info == 0.0, 0.0, 0.00001), gr)
+
+
+def _runs(*keys: np.ndarray) -> np.ndarray:
+    """For rows sorted by ``keys``: True where a run of equal key tuples
+    starts. Floats compare by ``!=``, so -0.0 and 0.0 share a run, as
+    they share a group in Spark and in ``np.unique``."""
+    start = np.zeros(len(keys[0]), dtype=bool)
+    start[:1] = True
+    for k in keys:
+        start[1:] |= k[1:] != k[:-1]
+    return start
+
+
+def _run_cumsum(a: np.ndarray, start: np.ndarray) -> np.ndarray:
+    """``np.cumsum(axis=0)`` of ``a`` within each run of rows that
+    ``start`` opens, bit for bit, in place: each pass adds row j of
+    every run at once, so there are as many passes as the longest run
+    has rows (at most the split candidates of one attribute), not one
+    per run."""
+    out = a
+    i = np.arange(len(start))
+    pos = i - np.maximum.accumulate(np.where(start, i, 0))
+    order = np.argsort(pos, kind="stable")
+    bounds = np.searchsorted(pos[order], np.arange(1, pos.max(initial=0) + 2))
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        rows = order[lo:hi]
+        out[rows] += out[rows - 1]
+    return out
 
 
 def _driver_level_stats(
@@ -1317,166 +1373,207 @@ def _driver_level_stats(
     (``by_value``, or the best boundary's ``n_le``; ``n_known``) of
     every (node, attribute) holding NULL values, for the rid update.
 
+    One vectorized pass per attribute kind, whatever the number of
+    (node, attribute) groups: the rows are sorted by (rid, aid, value,
+    class), and every per-group sum is a ``bincount`` over run ids. A
+    numeric attribute's per-value class masses form one dense matrix
+    over the declared classes whose running sums restart at each group;
+    the best boundary is the first minimum of the conditional entropy
+    over the candidates that pass the minimum-side guard
+    (minDataRatio, `MyReducer.java:34`), so ties go to the smaller
+    boundary, as the distributed struct-min has it. Each group's
+    numbers depend on its own rows only, so two attributes with equal
+    contingencies tie exactly, whichever groups surround them.
+
     Rows with a NULL value (a weighted contingency's) are their (node,
     attribute)'s unknown mass ``u``: Info is taken over the known rows,
     the gain ratio is scaled by the known fraction ``n / (n + u)``, and
     ``u`` is one more split-info branch. At ``u = 0`` each term is
     exactly neutral — the known rows' Info is the node's, the fraction
     is 1.0, ``xlog2x(0)`` is 0 — so the numbers are the unweighted
-    ones bit for bit.
+    ones bit for bit. A NaN ``value_d`` reads as NULL, since Arrow
+    brings both back as NaN.
     """
-    classes = list(label_domain)
-    cidx = {c: i for i, c in enumerate(classes)}
-    k = len(classes)
-
     hist: dict[int, dict] = {}
     cc = pdf[pdf[S.AID] == S.CC_AID]
     for rid, cls, cnt in zip(cc[S.RID], cc[S.CLASS], cc[S.CNT].tolist()):
         hist.setdefault(int(rid), {})[cls] = cnt
-
-    node_info: dict[int, float] = {}
-    for rid, h in hist.items():
-        counts = np.fromiter(h.values(), dtype=np.float64)
-        node_info[rid] = _entropy_np(counts.sum(), _xlog2x_np(counts).sum())
+    node_rid, node_at = np.unique(
+        cc[S.RID].to_numpy(np.int64), return_inverse=True
+    )
+    w = cc[S.CNT].to_numpy(np.float64)
+    node_info = _entropy_np(
+        np.bincount(node_at, w), np.bincount(node_at, _xlog2x_np(w))
+    )
 
     stats: dict[int, list] = {}
     masses: dict[tuple[int, str], dict] = {}
 
-    def emit(rid: int, aid: str, gr: float, boundary) -> None:
-        stats.setdefault(rid, []).append(
-            {S.AID: aid, "gain_ratio": gr, "boundary": boundary}
+    def rows(names: list[str], col: str, classes: list[str] | None = None):
+        """``names``' rows with a known value (of ``classes`` only, when
+        given): their (rid, aid) keys ``rid·|names| + aid``, values,
+        classes and masses; plus the sorted keys holding NULL values and
+        their unknown mass (of ``classes`` only, when given)."""
+        sel = pdf[S.AID].isin(names).to_numpy()
+        key = pdf[S.RID].to_numpy(np.int64)[sel] * len(names) + pd.Categorical(
+            pdf[S.AID][sel], categories=names
+        ).codes
+        value = pdf[col].to_numpy()[sel]
+        cls = pdf[S.CLASS].to_numpy()[sel]
+        cnt = pdf[S.CNT][sel]
+        null = pd.isna(value)
+        known = ~null
+        u = cnt[null]
+        if classes is not None:
+            ok = pd.Series(cls).isin(classes).to_numpy()
+            u = u.where(ok[null], 0.0)
+            known &= ok
+        u = u.groupby(key[null]).sum()
+        return (
+            key[known],
+            value[known],
+            cls[known],
+            cnt.to_numpy(np.float64)[known],
+            u.index.to_numpy(np.int64),
+            u.to_numpy(np.float64),
         )
 
-    def known(sub, col: str, classes=None):
-        """``sub``'s known-value rows, and per (rid, aid) holding NULL
-        values their unknown mass (of ``classes`` only, when given)."""
-        null = sub[col].isna()
-        if not null.any():
-            return sub, {}
-        w = sub[S.CNT][null]
-        if classes is not None:
-            w = w.where(sub[S.CLASS][null].isin(classes), 0.0)
-        u = w.groupby([sub[S.RID][null], sub[S.AID][null]]).sum()
-        return sub[~null], {(int(r), a): float(x) for (r, a), x in u.items()}
+    def unknown(ukey, umass, skey):
+        """Per group key: its unknown mass, and whether it has NULL rows."""
+        at = np.searchsorted(ukey, skey)
+        has = np.append(ukey, -1)[at] == skey
+        return np.where(has, np.append(umass, 0.0)[at], 0.0), has
+
+    def pair(names: list[str], key: int) -> tuple[int, str]:
+        return key // len(names), names[key % len(names)]
+
+    def emit(names, skey, gr, boundary) -> None:
+        for key, g, b in zip(skey.tolist(), gr.tolist(), boundary):
+            rid, aid = pair(names, key)
+            stats.setdefault(rid, []).append(
+                {S.AID: aid, "gain_ratio": g, "boundary": b}
+            )
+
+    def info_of(skey, width):
+        return node_info[np.searchsorted(node_rid, skey // width)]
 
     if cat_names:
-        sub, unknown = known(pdf[pdf[S.AID].isin(cat_names)], "value_s")
-        for (rid, aid), g in sub.groupby([S.RID, S.AID], sort=False):
-            rid = int(rid)
-            u = unknown.get((rid, aid), 0.0)
-            vals, inv = np.unique(g["value_s"].to_numpy(), return_inverse=True)
-            # the distributed categorical path aggregates over every
-            # class PRESENT (no pivot over label_domain) — mirror by
-            # indexing the group's own class values, not the domain
-            g_classes, gci = np.unique(g[S.CLASS].to_numpy(), return_inverse=True)
-            mat = np.zeros((len(vals), len(g_classes)), dtype=np.float64)
-            np.add.at(mat, (inv, gci), g[S.CNT].to_numpy(dtype=np.float64))
-            nv = mat.sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ent_v = np.where(
-                    nv > 0,
-                    np.log2(np.where(nv > 0, nv, 1.0))
-                    - _xlog2x_np(mat).sum(axis=1) / np.where(nv > 0, nv, 1.0),
-                    0.0,
-                )
-            n_attr = nv.sum()
-            entr = float((nv * ent_v).sum() / n_attr)
-            split_info = _entropy_np(
-                n_attr + u, _xlog2x_np(nv).sum() + _xlog2x_unknown(u)
-            )
-            info = node_info[rid]
-            if (rid, aid) in unknown:
-                info = _entropy_np(n_attr, _xlog2x_np(mat.sum(axis=0)).sum())
-                masses[(rid, aid)] = {
-                    "by_value": dict(zip(vals.tolist(), nv.tolist())),
-                    "n_known": float(n_attr),
-                }
-            gr = _gain_ratio_py(info, entr, split_info)
-            emit(rid, aid, gr * (n_attr / (n_attr + u)), None)
+        key, value, cls, w, ukey, umass = rows(cat_names, "value_s")
+        # the distributed categorical path aggregates over every class
+        # PRESENT (no pivot over label_domain) — mirrored by coding the
+        # classes the rows hold, not the domain
+        value, values = pd.factorize(value, sort=True)
+        cls, classes = pd.factorize(cls, sort=True)
+        o = np.lexsort((cls, value, key))
+        key, value, cls, w = key[o], value[o], cls[o], w[o]
+        seg0, val0, cell0 = _runs(key), _runs(key, value), _runs(key, value, cls)
+        x = np.bincount(np.cumsum(cell0) - 1, w)  # per (group, value, class)
+        cell_val = (np.cumsum(val0) - 1)[cell0]
+        nv = np.bincount(cell_val, x)
+        ent_v = _entropy_np(nv, np.bincount(cell_val, _xlog2x_np(x)))
+        val_seg = (np.cumsum(seg0) - 1)[val0]
+        n = np.bincount(val_seg, nv)
+        entr = np.bincount(val_seg, nv * ent_v) / n
+        skey = key[seg0]
+        u, has_u = unknown(ukey, umass, skey)
+        split_info = _entropy_np(
+            n + u, np.bincount(val_seg, _xlog2x_np(nv)) + _xlog2x_np(u)
+        )
+        # Info over the known rows' classes, where NULL rows exist
+        k = len(classes)
+        seg_cls, at = np.unique(
+            val_seg[cell_val] * k + cls[cell0], return_inverse=True
+        )
+        info_known = _entropy_np(
+            n,
+            np.bincount(
+                seg_cls // k, _xlog2x_np(np.bincount(at, x)), minlength=len(n)
+            ),
+        )
+        info = np.where(has_u, info_known, info_of(skey, len(cat_names)))
+        gr = _gain_ratio_np(info, entr, split_info) * (n / (n + u))
+        emit(cat_names, skey, gr, [None] * len(skey))
+        hit = has_u[val_seg]  # value rows of the groups holding NULLs
+        for key, n_known, v, m in zip(
+            skey[val_seg[hit]].tolist(),
+            n[val_seg[hit]].tolist(),
+            values[value[val0][hit]].tolist(),
+            nv[hit].tolist(),
+        ):
+            masses.setdefault(
+                pair(cat_names, key), {"by_value": {}, "n_known": n_known}
+            )["by_value"][v] = m
 
     if num_names:
         # the distributed numeric path pivots on label_domain, silently
-        # dropping out-of-domain classes — mirror with the same filter;
+        # dropping out-of-domain classes — mirrored by the same filter;
         # their NULL-value rows still need routing masses
-        sub, unknown = known(pdf[pdf[S.AID].isin(num_names)], "value_d", cidx)
-        sub = sub[sub[S.CLASS].isin(cidx)]
-        for (rid, aid), g in sub.groupby([S.RID, S.AID], sort=False):
-            rid = int(rid)
-            u = unknown.get((rid, aid), 0.0)
-            vals, inv = np.unique(g["value_d"].to_numpy(), return_inverse=True)
-            mat = np.zeros((len(vals), k), dtype=np.float64)
-            ci = np.fromiter(
-                (cidx[c] for c in g[S.CLASS]), dtype=np.int64, count=len(g)
-            )
-            np.add.at(mat, (inv, ci), g[S.CNT].to_numpy(dtype=np.float64))
-            cum = np.cumsum(mat, axis=0)
-            tot = cum[-1]
-            n = float(tot.sum())
-            n_le = cum.sum(axis=1)
-            n_gt = n - n_le
-            # candidates: all distinct values except the max, then the
-            # minimum-side guard (minDataRatio, `MyReducer.java:34`)
-            mask = (
-                (n_le < n)
-                & (n_le >= min_ratio * n)
-                & (n_gt >= min_ratio * n)
-            )
-            if not mask.any():
-                continue  # reference emits gr=-1, never selected
-            sum_x_le = _xlog2x_np(cum).sum(axis=1)
-            sum_x_gt = _xlog2x_np(tot[None, :] - cum).sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ent_le = np.where(
-                    n_le > 0,
-                    np.log2(np.where(n_le > 0, n_le, 1.0))
-                    - sum_x_le / np.where(n_le > 0, n_le, 1.0),
-                    0.0,
-                )
-                ent_gt = np.where(
-                    n_gt > 0,
-                    np.log2(np.where(n_gt > 0, n_gt, 1.0))
-                    - sum_x_gt / np.where(n_gt > 0, n_gt, 1.0),
-                    0.0,
-                )
-            entr = (n_le * ent_le + n_gt * ent_gt) / n
-            split_info = _entropy_np_vec(n, n_le, n_gt, u)
-            # argmin (entr, value) — values ascend, so the first index of
-            # the minimal entr is the smallest boundary (struct-min twin)
-            ci_mask = np.flatnonzero(mask)
-            best_local = ci_mask[np.argmin(entr[ci_mask])]
-            info = node_info[rid]
-            if (rid, aid) in unknown:
-                info = _entropy_np(n, _xlog2x_np(tot).sum())
-                masses[(rid, aid)] = {
-                    "n_le": float(n_le[best_local]),
-                    "n_known": n,
-                }
-            gr = _gain_ratio_py(
-                info,
-                float(entr[best_local]),
-                float(split_info[best_local]),
-            )
-            emit(rid, aid, gr * (n / (n + u)), float(vals[best_local]))
+        classes = list(label_domain)
+        key, v, cls, w, ukey, umass = rows(num_names, "value_d", classes)
+        v = v.astype(np.float64)
+        cls = pd.Categorical(cls, categories=classes).codes
+        o = np.lexsort((v, key))
+        key, v, cls, w = key[o], v[o], cls[o].astype(np.int64), w[o]
+        seg0, val0 = _runs(key), _runs(key, v)
+        k, n_val = len(classes), int(val0.sum())
+        # per (group, value) class masses, then their running sums
+        first = seg0[val0]  # value row that opens its group
+        cum = _run_cumsum(
+            np.bincount(
+                (np.cumsum(val0) - 1) * k + cls, w, minlength=n_val * k
+            ).reshape(n_val, k),
+            first,
+        )
+        vseg = np.cumsum(first) - 1
+        tot = cum[np.flatnonzero(np.r_[first, True][1:])]  # last rows
+        n = tot.sum(axis=1)
+        n_le = cum.sum(axis=1)
+        nn = n[vseg]
+        n_gt = nn - n_le
+        # candidates: all distinct values except the max, then the
+        # minimum-side guard (minDataRatio, `MyReducer.java:34`); a
+        # group without one emits nothing (the reference's gr=-1,
+        # never selected)
+        cand = np.flatnonzero(
+            (n_le < nn) & (n_le >= min_ratio * nn) & (n_gt >= min_ratio * nn)
+        )
+        c_le, le, gt = cum[cand], n_le[cand], n_gt[cand]
+        ent_le = _entropy_np(le, _xlog2x_np(c_le).sum(axis=1))
+        c_gt = tot[vseg[cand]]
+        c_gt -= c_le
+        del c_le
+        ent_gt = _entropy_np(gt, _xlog2x_np(c_gt).sum(axis=1))
+        del c_gt
+        entr = (le * ent_le + gt * ent_gt) / nn[cand]
+        # per group the first candidate of minimal entr — values ascend,
+        # so it is the smallest boundary (struct-min twin)
+        cs = vseg[cand]
+        run0 = _runs(cs)
+        low = np.minimum.reduceat(entr, np.flatnonzero(run0)) if len(cs) else entr
+        at_min = np.flatnonzero(entr == low[np.cumsum(run0) - 1])
+        pick = at_min[_runs(cs[at_min])]
+        best, s = cand[pick], cs[pick]
+        skey = key[seg0][s]
+        u, has_u = unknown(ukey, umass, skey)
+        info = np.where(
+            has_u,
+            _entropy_np(n[s], _xlog2x_np(tot[s]).sum(axis=1)),
+            info_of(skey, len(num_names)),
+        )
+        split_info = _entropy_np(
+            n[s] + u,
+            _xlog2x_np(n_le[best]) + _xlog2x_np(n_gt[best]) + _xlog2x_np(u),
+        )
+        gr = _gain_ratio_np(info, entr[pick], split_info) * (n[s] / (n[s] + u))
+        emit(num_names, skey, gr, v[val0][best].tolist())
+        for key, n_le_b, n_known in zip(
+            skey[has_u].tolist(),
+            n_le[best][has_u].tolist(),
+            n[s][has_u].tolist(),
+        ):
+            masses[pair(num_names, key)] = {"n_le": n_le_b, "n_known": n_known}
 
     return hist, stats, masses
-
-
-def _xlog2x_unknown(u: float) -> float:
-    """``u*log2(u)`` of the unknown split-info branch; 0 when empty."""
-    return float(u * np.log2(u)) if u > 0 else 0.0
-
-
-def _entropy_np_vec(
-    n: float, n_le: np.ndarray, n_gt: np.ndarray, unknown: float = 0.0
-) -> np.ndarray:
-    """Vectorized two-way split information for a fixed known total
-    ``n``, plus the ``unknown`` mass's branch."""
-    total = n + unknown
-    if total <= 0:
-        return np.zeros_like(n_le)
-    return np.log2(total) - (
-        _xlog2x_np(n_le) + _xlog2x_np(n_gt) + _xlog2x_unknown(unknown)
-    ) / total
 
 
 def _grow_levels(
@@ -1501,11 +1598,21 @@ def _grow_levels(
     action per tree level (the reference's one-MR-job-per-level shape,
     `Main.java:59-123`, plus the combiner it never had).
 
-    Level L's contingency feeds class histograms, categorical gain
-    ratios and numeric best-splits, all unioned into one
-    ``(kind, rid, aid, gain_ratio, boundary)`` relation so the collected
-    result is ≤ |frontier|×|attrs| rows; ReuseExchange dedups the shared
-    contingency child. Purity/guard decisions and the per-node argmax
+    Level L's contingency is collected via Arrow and reduced in numpy
+    (:func:`_driver_level_stats`) whenever its row bound fits
+    ``driver_stats_max_rows``: the smaller of the declared product
+    |frontier| × ``stat_rows_per_node`` and, on unweighted levels below
+    the root, the rows still alive × (1 + |features|) — each row adds
+    one class-histogram row and at most one row per feature. The rows
+    alive are the split parents' totals in the previous level's class
+    histograms. Under fractional fan-out a row's copies outnumber its
+    mass, so weighted levels keep the declared product. Otherwise class
+    histograms, categorical gain ratios and numeric best-splits are
+    reduced distributed and unioned into one ``(kind, rid, aid,
+    gain_ratio, boundary)`` relation so the collected result is ≤
+    |frontier|×|attrs| rows; its consumers do not share one exchange —
+    each re-reads the level (the 600-node wide level ran four map
+    stages over it). Purity/guard decisions and the per-node argmax
     happen driver-side (:func:`_decide_level`). The terminal level
     (every node depth-capped) takes the ``hist_only`` fast path — a
     plain ``groupBy(rid, class)`` with no attribute melt, dropping the
@@ -1527,6 +1634,7 @@ def _grow_levels(
         max_depth=max_depth,
         min_rows=min_rows,
     )
+    alive: int | None = None  # rows reaching this level, when bounded
     while frontier:
         # per level, level 0 included: without it the numeric snap runs
         # in both level 0's action and level 1's materialization. Later
@@ -1548,10 +1656,10 @@ def _grow_levels(
                 weight,
             )
         masses: dict[tuple[int, str], dict] = {}
-        driver = (
-            not hist_only
-            and 0 < len(frontier) * stat_rows_per_node <= driver_stats_max_rows
-        )
+        bound = len(frontier) * stat_rows_per_node
+        if alive is not None:
+            bound = min(bound, alive * (1 + len(cat_names) + len(num_names)))
+        driver = not hist_only and 0 < bound <= driver_stats_max_rows
         if driver:
             # bounded-contingency fast path: the level's plan is just
             # melt → grouped count (the ONE data-sized exchange); the
@@ -1560,7 +1668,7 @@ def _grow_levels(
             # Collapses ~10 tiny post-shuffle stages per level into 2 —
             # at local scale the scheduling/codegen of those stages WAS
             # the training time. Falls back to the fully distributed
-            # reduction for wide frontiers/schemas.
+            # reduction for wide frontiers/schemas on many rows.
             pdf = cont.toPandas()
             if weight:
                 pdf[S.CNT] = pdf[S.CNT].astype(np.float64)
@@ -1607,6 +1715,8 @@ def _grow_levels(
         )
         if not frontier:
             break
+        if not weight:
+            alive = sum(sum(hist[p].values()) for p, _ in splits)
         if weight and not driver:
             # winners only, after the decision: that collect is
             # frontier-bounded, not contingency-sized

@@ -1863,9 +1863,10 @@ def _c45_train_wide_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-schema training stress (VERDICT r7 item 4): the 33-attribute
     table (`operators/training.py::wide_training`, 600-way categorical +
     32 hash-noise numerics) whose 600-node depth-1 frontier pushes the
-    bounded-contingency estimate past ``tree._DRIVER_STATS_MAX_ROWS``,
-    switching the level reduction onto the fully distributed path BY THE
-    BOUND mid-train (pytest-pinned path sequence + model equivalence in
+    declared contingency estimate past ``tree._DRIVER_STATS_MAX_ROWS``;
+    the level moves onto the fully distributed path mid-train when its
+    rows alive × 34 pass the bound too, i.e. from ~118k rows (sf0.1)
+    up (pytest-pinned path sequences + model equivalence in
     tests/test_wide_training.py; wall time in
     scripts/probe_wide_training.py). Rows-only: no SQL engine can
     re-derive the trained tree. Returns per-depth rule counts — a

@@ -1,8 +1,10 @@
 """Wall-time probe for WIDE-SCHEMA training (VERDICT r7 item 4): the
 33-attribute stress table (`operators/training.py::wide_training`) whose
-600-node depth-1 frontier pushes the bounded-contingency estimate past
-`tree._DRIVER_STATS_MAX_ROWS`, engaging the fully distributed per-level
-reduction BY THE BOUND mid-train. Records what the default (mixed
+600-node depth-1 frontier pushes the declared contingency estimate past
+`tree._DRIVER_STATS_MAX_ROWS` and, at sf0.1, its rows alive × 34 too,
+engaging the fully distributed per-level reduction BY THE BOUND
+mid-train (below ~118k rows the level stays on the driver). Records
+what the default (mixed
 driver→distributed) run, the forced-driver run and the forced-
 distributed run cost at the bench scale factor; the three models are
 pytest-pinned identical (tests/test_wide_training.py).

@@ -178,6 +178,52 @@ def test_model_parquet_sink_roundtrip(tmp_path, spark, schema, weather):
     assert sorted(map(str, a)) == sorted(map(str, b))
 
 
+def _sink_schema(n_type):
+    """The model relation's schema as the row-tuple ``to_df`` wrote it."""
+    from pyspark.sql import types as T
+
+    cond = T.StructType(
+        [T.StructField(f, T.StringType()) for f in ("attr", "op", "value")]
+    )
+    return T.StructType(
+        [
+            T.StructField("rule_id", T.IntegerType()),
+            T.StructField("conditions", T.ArrayType(cond)),
+            T.StructField("label", T.StringType()),
+            T.StructField("n", n_type),
+            T.StructField("depth", T.IntegerType()),
+        ]
+    )
+
+
+def test_model_parquet_sink_schema(tmp_path, spark):
+    """The Arrow-built model relation keeps the schema the row-built one
+    had, in the frame and in the written file: ``n`` BIGINT for row
+    counts, DOUBLE once a mass is fractional, and a condition-less
+    root-leaf rule as an empty array."""
+    from pyspark.sql import types as T
+
+    eq, le = Tr.Condition("a", Tr.OP_EQ, "x'y"), Tr.Condition("v", Tr.OP_LE, 2.5)
+    cases = {
+        "bigint": ([Tr.Rule((eq,), "P", 7, 1), Tr.Rule((le,), "N", 3, 1)],
+                   T.LongType()),
+        "double": ([Tr.Rule((eq, le), "P", 2.75, 2), Tr.Rule((eq,), "N", 4, 1)],
+                   T.DoubleType()),
+        "root_leaf": ([Tr.Rule((), "yes", 14, 0)], T.LongType()),
+    }
+    for name, (rules, n_type) in cases.items():
+        model = Tr.DecisionListModel(rules=rules)
+        assert model.to_df(spark).schema == _sink_schema(n_type), name
+        p = str(tmp_path / name)
+        model.save_parquet(spark, p)
+        assert spark.read.parquet(p).schema == _sink_schema(n_type), name
+        back = Tr.DecisionListModel.load_parquet(spark, p)
+        assert back.rules == rules, name
+        assert [type(r.n) for r in back.rules] == [
+            type(r.n if n_type == T.LongType() else float(r.n)) for r in rules
+        ], name
+
+
 def test_trie_prediction_equals_flat_chain(spark, schema, weather):
     """The trie compile must agree with the naive rule-by-rule chain."""
     from pyspark.sql import functions as F
